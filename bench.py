@@ -43,20 +43,32 @@ HEADLINE = [
 
 
 def avro_decode_mb_s(spark) -> tuple[float, float]:
-    """Measured throughput ceiling of the pure-Python Avro OCF ingest
-    path (sources/avro_ocf.py): MB of object-container-file bytes
-    decoded per second of wall clock across the session's cores. The
-    container has no spark-avro datasource jar and no Python avro
-    package, so this Python decoder IS the wire-format read path —
-    this number makes its cost a measured fact instead of a caveat.
+    """Measured throughput of the Avro OCF ingest path
+    (sources/avro_ocf.py: the C kernel of sources/avro_ckernel.py per
+    file, the pure-Python closure tree where no compiler is present):
+    MB of object-container-file bytes decoded per second of wall clock
+    across the session's cores. The container has no spark-avro
+    datasource jar and no Python avro package, so this decoder IS the
+    wire-format read path.
 
-    One representative CDC-envelope file is generated driver-side and
-    replicated (decode cost is content-dependent, not name-dependent);
-    timing is best-of-3 on a warm session, full pipeline to a noop
-    sink. Returns (read-path MB/s, convert-to-parquet MB/s)."""
+    Builds the fixture (write_avro_fixture), times it
+    (time_avro_decode) and removes it. Returns (read-path MB/s,
+    convert-to-parquet MB/s)."""
     import shutil
     import tempfile
 
+    tmp = tempfile.mkdtemp(prefix="avro_bench_")
+    try:
+        return time_avro_decode(spark, tmp, write_avro_fixture(tmp))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def write_avro_fixture(out_dir: str, n_files: int = 32) -> float:
+    """Write the decode benchmark's fixture into ``out_dir``: one
+    representative CDC-envelope file generated driver-side and
+    replicated ``n_files`` times (decode cost is content-dependent, not
+    name-dependent). Returns the fixture's total uncompressed MB."""
     from datastream_delta_plugins_spark.sources import avro_ocf
 
     envelope = {
@@ -96,8 +108,8 @@ def avro_decode_mb_s(spark) -> tuple[float, float]:
         ],
     }
     # File sized like a real change blob (~20 MB of records, hundreds
-    # of 64 KiB sync blocks) so the wavefront decoder has lanes and
-    # per-task decode time >> task scheduling (~90 ms).
+    # of 64 KiB sync blocks) so per-task decode time >> task
+    # scheduling (~90 ms).
     recs = []
     for i in range(120000):
         ts = 1700000000000 + i
@@ -122,34 +134,41 @@ def avro_decode_mb_s(spark) -> tuple[float, float]:
     # ~10x, and "change bytes ingested per second" is the number a
     # capacity plan needs, independent of the file codec
     raw_mb = len(avro_ocf.write_ocf(envelope, recs, codec="null")) / 1e6
-    tmp = tempfile.mkdtemp(prefix="avro_bench_")
-    try:
-        n_files = 32
-        for i in range(n_files):
-            with open(os.path.join(tmp, f"f{i:03d}.avro"), "wb") as f:
-                f.write(blob)
-        total_mb = raw_mb * n_files
-        df = avro_ocf.read_avro_changes(spark, tmp)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(3):  # best-of-3: this host has multi-second
-            # contention bursts; 2 samples can both land inside one
-            t0 = time.perf_counter()
-            avro_ocf.read_avro_changes(spark, tmp) \
-                .write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        # conversion path: decode-once to parquet written by the
-        # workers (no JVM rows) — the landing's production shape
-        best_conv = float("inf")
-        for _ in range(3):
-            out = tempfile.mkdtemp(prefix="avro_conv_")
-            t0 = time.perf_counter()
-            avro_ocf.convert_avro_to_parquet(spark, tmp, out)
-            best_conv = min(best_conv, time.perf_counter() - t0)
-            shutil.rmtree(out, ignore_errors=True)
-        return total_mb / best, total_mb / best_conv
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    for i in range(n_files):
+        with open(os.path.join(out_dir, f"f{i:03d}.avro"), "wb") as f:
+            f.write(blob)
+    return raw_mb * n_files
+
+
+def time_avro_decode(spark, fixture_dir: str,
+                     total_mb: float) -> tuple[float, float]:
+    """Best-of-3 decode and convert throughput over a fixture from
+    write_avro_fixture, on a warm session, full pipeline to a noop sink.
+    Returns (read-path MB/s, convert-to-parquet MB/s)."""
+    import shutil
+    import tempfile
+
+    from datastream_delta_plugins_spark.sources import avro_ocf
+
+    df = avro_ocf.read_avro_changes(spark, fixture_dir)
+    df.write.format("noop").mode("overwrite").save()  # warm
+    best = float("inf")
+    for _ in range(3):  # best-of-3: this host has multi-second
+        # contention bursts; 2 samples can both land inside one
+        t0 = time.perf_counter()
+        avro_ocf.read_avro_changes(spark, fixture_dir) \
+            .write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    # conversion path: decode-once to parquet written by the
+    # workers (no JVM rows) — the landing's production shape
+    best_conv = float("inf")
+    for _ in range(3):
+        out = tempfile.mkdtemp(prefix="avro_conv_")
+        t0 = time.perf_counter()
+        avro_ocf.convert_avro_to_parquet(spark, fixture_dir, out)
+        best_conv = min(best_conv, time.perf_counter() - t0)
+        shutil.rmtree(out, ignore_errors=True)
+    return total_mb / best, total_mb / best_conv
 
 
 #: fact tables rewritten as multi-file inputs for the bench run — the
@@ -449,6 +468,8 @@ def main() -> None:
                     if si is not None and si.numCompletedTasks > 0:
                         n_stages += 1
                         n_tasks += si.numCompletedTasks
+                        if run_ms < 0:
+                            continue  # a failed stage read: report -1
                         try:  # executor task time via the status store
                             jstore = sc._jsc.sc().statusStore()
                             empty = sc._jvm.java.util.Collections.emptyList()

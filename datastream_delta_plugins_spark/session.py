@@ -26,9 +26,10 @@ def _tune_worker_allocator() -> None:
     numpy frees/reallocates MB-scale temporaries constantly in the
     Arrow-batched decode paths; glibc's default 128 KiB mmap threshold
     turns each into an mmap/munmap pair, and at local[32] the resulting
-    page-fault storm serializes in the kernel (measured: 16-way
-    avro_vector decode 2.8 s -> 2.0 s per file with these settings).
-    Large thresholds keep big blocks on the reusable heap instead."""
+    page-fault storm serializes in the kernel (measured on the since
+    retired numpy wavefront Avro decoder: 16-way decode 2.8 s -> 2.0 s
+    per file with these settings). Large thresholds keep big blocks on
+    the reusable heap instead."""
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 

@@ -1,9 +1,8 @@
-"""Native (C, ctypes) Avro block decoder — the fastest ingest tier.
+"""Native (C, ctypes) Avro block decoder — the fast ingest tier.
 
-The wavefront decoder (`avro_vector`) removed per-record Python from
-the hot path, but its per-field numpy dispatch still costs ~40 array
-ops per record-wave; at ~25 MB/s/core the wire decode remains the top
-line of the ingest budget. This module compiles the same schema subset
+The closure-tree decoder in `avro_ocf` pays ~0.2 µs of interpreter
+time per field, which makes the wire decode the top line of the ingest
+budget. This module compiles the Datastream envelope's schema subset
 into a flat OPCODE PROGRAM and executes it in ~200 lines of C (built
 once with the system compiler, loaded via ctypes): one call decodes an
 entire file's blocks into preallocated columnar buffers — two passes
@@ -15,14 +14,19 @@ decode behind a columnar interface); the environment has no such jar,
 so the kernel fills that slot. Safety posture:
 
   - availability-gated: if `cc` is missing or the compile fails, the
-    loader returns None and callers fall through to the numpy
-    wavefront, then the closure tree — the pure-Python paths remain
-    the reference semantics;
-  - same schema subset as `avro_vector` (`Unsupported` otherwise);
+    loader returns None and callers fall back to the closure tree —
+    the pure-Python path remains the reference semantics;
+  - schema subset: records, nullable unions, scalar unions that map
+    to StringType, string/bytes/long/int/boolean/double/float/fixed/
+    enum, decimal-on-bytes, timestamp/date/time logicals on long, and
+    one level of arrays of scalar/union items (``sort_keys``); maps,
+    nested arrays, decimal-on-fixed, other logical types on long and
+    the zero-width shapes (fixed size 0, records with no fields) raise
+    `Unsupported` and take the closure tree;
   - bounds-checked: string/fixed reads are limited to their block,
     varints cap at 10 bytes, and every block must land exactly on its
     boundary or the decode is rejected;
-  - output is pinned byte-identical to both Python decoders by the
+  - output is pinned byte-identical to the closure tree by the
     fixture equivalence test and the hypothesis property test.
 
 On a real cluster the .so ships like any native dependency (wheel /
@@ -35,6 +39,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import json
+import logging
 import os
 import subprocess
 import tempfile
@@ -42,7 +47,19 @@ import tempfile
 import numpy as np
 import pyarrow as pa
 
-from .avro_vector import PAD, Unsupported, _bitmap, scan_blocks
+from .avro_ocf import scan_blocks
+
+#: zero bytes appended past the decoded blocks, on top of the per-op
+#: overrun allowance in decode_columnar
+PAD = 16
+
+
+class Unsupported(Exception):
+    """No kernel, or a schema outside its subset — use the closure tree."""
+
+
+def _bitmap(valid: np.ndarray) -> pa.Buffer:
+    return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -287,7 +304,7 @@ _LIB_TRIED = False
 
 def _lib():
     """Build (once, content-addressed) and load the kernel; None when
-    no compiler is available — callers fall back to the Python tiers."""
+    no compiler is available — callers fall back to the closure tree."""
     global _LIB, _LIB_TRIED
     if _LIB_TRIED:
         return _LIB
@@ -309,7 +326,10 @@ def _lib():
         lib = ctypes.CDLL(so)
         lib.decode_file.restype = ctypes.c_int
         _LIB = lib
-    except Exception:
+    except Exception as e:
+        logging.getLogger(__name__).warning(
+            "Avro C kernel unavailable (%r); this process decodes Avro "
+            "with the pure-Python closure tree, ~20x slower", e)
         _LIB = None
     return _LIB
 
@@ -556,8 +576,13 @@ def _ptr_array(arrs, nleaves):
 
 
 def decode_columnar(raw: bytes):
-    """C-kernel decode of one OCF file; same return contract as
-    avro_vector.decode_columnar (schema, n_rows, nested finished)."""
+    """C-kernel decode of one OCF file.
+
+    Returns ``(schema, n_rows, finished)`` where ``finished`` is the
+    schema's nested dict of pyarrow arrays (numpy object arrays for
+    decimals; ``{"offsets", "valid", "items"}`` for arrays), or raises
+    :class:`Unsupported` when no kernel is available or the schema is
+    outside the subset (callers fall back to ``avro_ocf.read_ocf``)."""
     lib = _lib()
     if lib is None:
         raise Unsupported("no C kernel available")
@@ -680,7 +705,7 @@ def decode_columnar(raw: bytes):
             return finish_leaf(sh[1])
         if tag == "record":
             return {name: assemble(s) for name, s in sh[1]}
-        # array: same contract as avro_vector._Array.finish
+        # array: row offsets + validity over the flattened items
         _, CL, item_shape = sh
         cnt_valid = valida[CL].view(bool)
         cnts = i64a[CL]

@@ -7,9 +7,9 @@ and relies on the bucket's TTL to retire it (reference:
 DatastreamEventConsumer.java:182-199, DatastreamEventReader.java:213-281
 mark-after-commit). This module is that discipline for the Spark
 engine: an incremental converter that decodes each new Avro file ONCE
-(default: `convert_avro_to_parquet`, the worker-side pyarrow writer —
-decode to one Arrow batch, write parquet in place, no JVM row
-materialization) into a parquet landing directory, after which every
+(`convert_avro_to_parquet`, the worker-side pyarrow writer — decode to
+one Arrow batch, write parquet in place, no JVM row materialization)
+into a parquet landing directory, after which every
 consumer — the CDC merge stream, re-merges, rollups, ad-hoc queries —
 reads parquet and never touches Avro again.
 
@@ -62,7 +62,7 @@ import re
 import time
 
 from ..streaming.commitlog import attempt_name_re, attempt_unique_name
-from .avro_ocf import convert_avro_to_parquet, read_avro_changes
+from .avro_ocf import convert_avro_to_parquet
 
 LOG_SUBDIR = "_landing_log"
 SEG_SUBDIR = "segments"
@@ -89,10 +89,9 @@ class AvroLandingConverter:
 
     def __init__(self, spark, avro_dir: str, landing_dir: str,
                  avro_schema=None, columns=None,
-                 commit_impl: str = "pointer", decoder: str = "auto",
+                 commit_impl: str = "pointer",
                  retention_days: float | None = 30.0,
                  path_layout: str = "flat",
-                 conversion: str = "direct",
                  source_store=None, data_store=None,
                  occ_retries: int = 5, client=None):
         from ..streaming.commitlog import (ObjectStoreLog, PosixStore,
@@ -100,23 +99,14 @@ class AvroLandingConverter:
                                            sidecar_store_for)
         if path_layout not in ("flat", "datestream"):
             raise ValueError(f"unknown path_layout {path_layout!r}")
-        if conversion not in ("direct", "spark"):
-            raise ValueError(f"unknown conversion {conversion!r}")
         self.spark = spark
         self.avro_dir = avro_dir
         self.landing_dir = landing_dir
         self.data_dir = os.path.join(landing_dir, "data")
         self.avro_schema = avro_schema
         self.columns = columns
-        self.decoder = decoder
         self.retention_days = retention_days
         self.path_layout = path_layout
-        # "direct" (default): workers decode each blob to ONE Arrow
-        # batch and write parquet with pyarrow in place — no JVM row
-        # materialization on the conversion path (the 100 TB shape);
-        # "spark": decode -> DataFrame -> Spark parquet writer (kept
-        # for comparison; byte-compatible schemas either way)
-        self.conversion = conversion
         self.occ_retries = occ_retries
         self.seg_dir = os.path.join(landing_dir, LOG_SUBDIR, SEG_SUBDIR)
         if client is not None:
@@ -273,18 +263,10 @@ class AvroLandingConverter:
             # manifest)
             bdir = attempt_unique_name("b", batch)
             out = os.path.join(self.data_dir, bdir)
-            if self.conversion == "direct":
-                convert_avro_to_parquet(
-                    self.spark, new, out, columns=self.columns,
-                    avro_schema=self.avro_schema, decoder=self.decoder)
-                schema = self.spark.read.parquet(out).schema
-            else:
-                df = read_avro_changes(self.spark, new,
-                                       columns=self.columns,
-                                       avro_schema=self.avro_schema,
-                                       decoder=self.decoder)
-                df.write.mode("overwrite").parquet(out)
-                schema = df.schema
+            convert_avro_to_parquet(
+                self.spark, new, out, columns=self.columns,
+                avro_schema=self.avro_schema)
+            schema = self.spark.read.parquet(out).schema
             ctx.update(files=new, bdir=bdir, schema=schema, stamp=batch)
         now = time.time()
         segments = self._updated_segments(committed, new, now,

@@ -14,10 +14,22 @@ logical types timestamp-millis/micros and decimal(p,s)-on-bytes.
 Distributed read path (the Spark-first part): files land as rows of
 `spark.read.format("binaryFile")` (path, content) and are decoded in
 executors via mapInArrow — per file, the native opcode decoder
-(avro_ckernel) when a compiler is available, else the vectorized
-wavefront (avro_vector), else this module's closure tree; all three
-emit identical Arrow batches. At 100 TB the unit of parallelism is
-the file, exactly like the reference's per-blob consumer loop.
+(avro_ckernel) when a C compiler is available and the schema is inside
+its subset, else this module's closure tree; both emit identical Arrow
+batches. At 100 TB the unit of parallelism is the file, exactly like
+the reference's per-blob consumer loop.
+
+Per-tier decode rate, one file to columns, on the CDC envelope of
+`bench.write_avro_fixture` (first 40k records: 7.35 MB uncompressed,
+deflate; one core of a 4-vCPU x86 host, best of 3):
+
+    C kernel (avro_ckernel)             103   MB/s
+    numpy wavefront (retired)            14.7 MB/s
+    closure tree (this module)            4.6 MB/s
+
+The numpy tier ran only where no compiler was present, and then only
+on files of 8+ blocks, so it was removed. Without a compiler every file
+takes the closure tree, and each worker process logs that once.
 
 The writer exists to build golden fixtures shaped like the reference's
 test corpus (dump/insert/update/delete/update-pk.avro, FIXTURES.md F1).
@@ -351,32 +363,9 @@ def _reader_for(schema_json: bytes, schema) -> object:
     return reader
 
 
-def read_ocf_schema(raw: bytes) -> dict:
-    """Writer schema from the OCF header alone — no block decode.
-
-    The reader-construction peek (`read_avro_changes` with
-    avro_schema=None) only needs the schema; decoding the whole first
-    blob for it cost ~4 s per plan on a 22 MB change file (measured:
-    4.3 s construct vs 0.95 s for the entire 700 MB decode job)."""
-    dec = _Decoder(raw)
-    if dec.read(4) != MAGIC:
-        raise ValueError("not an Avro object-container file")
-    meta = {}
-    while True:
-        n = dec.long()
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            dec.long()
-        for _ in range(n):
-            k = dec.string()
-            meta[k] = dec.bytes_()
-    return json.loads(meta["avro.schema"])
-
-
-def read_ocf(raw: bytes) -> tuple[dict, list[dict]]:
-    """Parse one Avro object-container file -> (schema, records)."""
+def _read_header(raw: bytes) -> tuple[dict, _Decoder]:
+    """Parse the OCF header: (metadata map, decoder positioned at the
+    header's sync marker). The one header parser every reader uses."""
     dec = _Decoder(raw)
     if dec.read(4) != MAGIC:
         raise ValueError("not an Avro object-container file")
@@ -391,12 +380,14 @@ def read_ocf(raw: bytes) -> tuple[dict, list[dict]]:
         for _ in range(n):
             k = dec.string()  # key MUST be read before the value
             meta[k] = dec.bytes_()
-    schema = json.loads(meta["avro.schema"])
-    reader = _reader_for(meta["avro.schema"], schema)
+    return meta, dec
+
+
+def _blocks(meta: dict, dec: _Decoder):
+    """Yield (record count, decompressed bytes) per data block after the
+    header, checking each block's trailing sync marker."""
     codec = meta.get("avro.codec", b"null").decode()
     sync = dec.read(16)
-    records: list[dict] = []
-    append = records.append
     while dec.pos < len(dec.buf):
         count = dec.long()
         size = dec.long()
@@ -407,17 +398,53 @@ def read_ocf(raw: bytes) -> tuple[dict, list[dict]]:
             raise ValueError(f"unsupported Avro codec {codec!r}")
         # records consume >= 1 byte each: bound the per-block record
         # loop by the block's bytes so a crafted huge count cannot
-        # spin it ~2^63 times (the zero-width schemas this would
+        # spin it ~2^63 times or size count-sized output allocations
+        # (executor CPU/memory DoS; the zero-width schemas this would
         # reject — empty records — carry no data anyway)
         if count < 0 or count > len(block):
             raise ValueError(
                 f"corrupt Avro block: {count} records in "
                 f"{len(block)} bytes")
+        yield count, block
+        if dec.read(16) != sync:
+            raise ValueError("sync marker mismatch")
+
+
+def read_ocf_schema(raw: bytes) -> dict:
+    """Writer schema from the OCF header alone — no block decode.
+
+    The reader-construction peek (`read_avro_changes` with
+    avro_schema=None) only needs the schema; decoding the whole first
+    blob for it cost ~4 s per plan on a 22 MB change file (measured:
+    4.3 s construct vs 0.95 s for the entire 700 MB decode job)."""
+    return json.loads(_read_header(raw)[0]["avro.schema"])
+
+
+def scan_blocks(raw: bytes):
+    """Parse the OCF header and decompress every block.
+
+    Returns ``(meta, counts, datas)`` where ``counts[i]`` records and
+    ``datas[i]`` bytes form block *i*.
+    """
+    meta, dec = _read_header(raw)
+    counts, datas = [], []
+    for count, block in _blocks(meta, dec):
+        counts.append(count)
+        datas.append(block)
+    return meta, counts, datas
+
+
+def read_ocf(raw: bytes) -> tuple[dict, list[dict]]:
+    """Parse one Avro object-container file -> (schema, records)."""
+    meta, dec = _read_header(raw)
+    schema = json.loads(meta["avro.schema"])
+    reader = _reader_for(meta["avro.schema"], schema)
+    records: list[dict] = []
+    append = records.append
+    for count, block in _blocks(meta, dec):
         bdec = _Decoder(block)
         for _ in range(count):
             append(reader(bdec))
-        if dec.read(16) != sync:
-            raise ValueError("sync marker mismatch")
     return schema, records
 
 
@@ -427,10 +454,8 @@ def write_ocf(schema: dict, records: list[dict], codec: str = "deflate",
 
     Like the stock Avro ``DataFileWriter``, a block is flushed whenever
     the pending encoded bytes reach ``sync_interval`` (Java default
-    64 KiB) — multi-block files are what real writers produce, and what
-    gives `avro_vector`'s wavefront decoder its lanes. ``sync_interval
-    <= 0`` forces a single block (the degenerate shape the fallback
-    reader covers)."""
+    64 KiB) — multi-block files are what real writers produce.
+    ``sync_interval <= 0`` forces a single block."""
     enc = _Encoder()
     enc.raw(MAGIC)
     meta = {"avro.schema": json.dumps(schema).encode(),
@@ -516,12 +541,12 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
     DataFrame; `convert_avro_to_parquet` wraps it to write parquet in
     the worker without ever materializing JVM rows.
 
-    Decode is the vectorized wavefront of `avro_vector` whenever the
-    file shape allows (multi-block, envelope-subset schema) — columns
-    flow from the block bytes into Arrow buffers without building
-    Python row objects — and falls back to the closure-tree decoder
-    per file otherwise. Both paths emit identical Arrow batches
-    (pinned by tests/test_avro_source.py).
+    Decode is the C kernel of `avro_ckernel` whenever it is available
+    and the file's schema is inside its subset — columns flow from the
+    block bytes into Arrow buffers without building Python row objects
+    — and falls back to the closure-tree decoder per file otherwise.
+    Both paths emit identical Arrow batches (pinned by
+    tests/test_avro_source.py).
 
     The reader schema is `avro_schema` (the registry-described envelope,
     the reference's source of truth after a schema_key change) or, when
@@ -534,11 +559,11 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
     DatastreamEventReader.java:652-674).
 
     ``decoder`` pins the per-file decode path: "auto" (C kernel when
-    available, then the vectorized wavefront, then the closure tree,
-    per file), "ckernel"/"vector"/"scalar" (that tier only — raise
-    instead of falling back; the equivalence tests diff the tiers).
+    available, else the closure tree, per file), "ckernel"/"scalar"
+    (that tier only — raise instead of falling back; the equivalence
+    tests diff the tiers).
     """
-    if decoder not in ("auto", "scalar", "vector", "ckernel"):
+    if decoder not in ("auto", "scalar", "ckernel"):
         raise ValueError(f"unknown decoder {decoder!r}")
     from pyspark.sql import types as T
 
@@ -616,7 +641,7 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
 
     import pyarrow as pa
 
-    from . import avro_vector
+    from . import avro_ckernel
 
     # target Arrow schema: Spark's own mapping of out_schema, with
     # naive timestamps — both decode paths produce epoch-derived wall
@@ -779,29 +804,19 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
              else _to_target(arrays[f.name], f.type) for f in base],
             schema=base))
 
-    def decode_vector(fpath, raw):
-        """Wavefront fast path: block bytes -> Arrow, no row objects."""
-        return _assemble(fpath, *avro_vector.decode_columnar(raw))
-
     def decode_ckernel(fpath, raw):
         """Native tier: the ctypes C block decoder (avro_ckernel)."""
-        from . import avro_ckernel
         return _assemble(fpath, *avro_ckernel.decode_columnar(raw))
 
     def decode_one(fpath, raw):
         if decoder == "scalar":
             return decode_scalar(fpath, raw)
-        if decoder == "vector":
-            return decode_vector(fpath, raw)
         if decoder == "ckernel":
             return decode_ckernel(fpath, raw)
         try:
             return decode_ckernel(fpath, raw)
-        except avro_vector.Unsupported:
-            try:
-                return decode_vector(fpath, raw)
-            except avro_vector.Unsupported:
-                return decode_scalar(fpath, raw)
+        except avro_ckernel.Unsupported:
+            return decode_scalar(fpath, raw)
 
     def decode_files(batches):
         """(fpath, RecordBatch) per input file — the path rides beside
@@ -829,9 +844,9 @@ def read_avro_changes(spark, path: str, columns=None, avro_schema=None,
     snapshot/CDC classification.
 
     Decode is per file: the native opcode decoder (avro_ckernel) when a
-    compiler is available, else the vectorized wavefront (avro_vector),
-    else the closure tree — all three emit identical Arrow batches
-    (pinned by tests/test_avro_source.py). T3 normalization (_op,
+    compiler is available and the schema is inside its subset, else the
+    closure tree — both emit identical Arrow batches (pinned by
+    tests/test_avro_source.py). T3 normalization (_op,
     _is_snapshot) is computed vectorized inside the worker's batch.
 
     The reader schema is `avro_schema` (the registry-described envelope,
@@ -845,9 +860,9 @@ def read_avro_changes(spark, path: str, columns=None, avro_schema=None,
     DatastreamEventReader.java:652-674).
 
     ``decoder`` pins the per-file decode path: "auto" (C kernel when
-    available, then the vectorized wavefront, then the closure tree,
-    per file), "ckernel"/"vector"/"scalar" (that tier only — raise
-    instead of falling back; the equivalence tests diff the tiers).
+    available, else the closure tree, per file), "ckernel"/"scalar"
+    (that tier only — raise instead of falling back; the equivalence
+    tests diff the tiers).
     """
     bin_df, decode, out_schema = _arrow_decode_plan(
         spark, path, columns=columns, avro_schema=avro_schema,
@@ -857,7 +872,7 @@ def read_avro_changes(spark, path: str, columns=None, avro_schema=None,
 
 
 def convert_avro_to_parquet(spark, path, out_dir: str, columns=None,
-                            avro_schema=None, decoder: str = "auto",
+                            avro_schema=None,
                             compression: str = "snappy") -> list[dict]:
     """Decode-once Avro -> parquet conversion that never materializes a
     JVM row: each worker decodes a file to ONE Arrow batch and writes
@@ -881,8 +896,7 @@ def convert_avro_to_parquet(spark, path, out_dir: str, columns=None,
     (contract-bounded driver collect: one row per converted file).
     """
     bin_df, decode, _out_schema = _arrow_decode_plan(
-        spark, path, columns=columns, avro_schema=avro_schema,
-        decoder=decoder)
+        spark, path, columns=columns, avro_schema=avro_schema)
     from pyspark.sql import types as T
     manifest_schema = T.StructType([
         T.StructField("source_file", T.StringType()),

@@ -25,14 +25,13 @@ def _events(lo, hi, method=CDC, ct="INSERT"):
             for i in range(lo, hi)]
 
 
-@pytest.fixture(params=[("pointer", "direct"), ("log", "spark")])
+@pytest.fixture(params=[{"commit_impl": "pointer"},
+                        {"commit_impl": "log"}])
 def conv(request, spark, tmp_path):
-    impl, conversion = request.param
     src = tmp_path / "avro"
     src.mkdir()
     return src, AvroLandingConverter(
-        spark, str(src), str(tmp_path / "landing"),
-        commit_impl=impl, conversion=conversion)
+        spark, str(src), str(tmp_path / "landing"), **request.param)
 
 
 def test_each_file_converted_exactly_once(spark, conv):
@@ -516,21 +515,21 @@ def test_landing_drift_merges_schema_vintages(spark, tmp_path):
 
 
 def test_direct_and_spark_conversion_identical(spark, tmp_path):
-    """The worker-side pyarrow conversion (no JVM rows) must land the
-    SAME schema and values as the Spark-writer path — the direct path
-    is a pure execution-shape change."""
-    srcs = {}
-    for mode in ("direct", "spark"):
-        src = tmp_path / f"avro_{mode}"
-        src.mkdir()
-        _write_avro(src, "k1_oracle-backfill_0.avro", _events(0, 20, SNAP))
-        _write_avro(src, "k1_oracle-cdc-logminer_1.avro", _events(20, 25))
-        c = AvroLandingConverter(spark, str(src),
-                                 str(tmp_path / f"landing_{mode}"),
-                                 conversion=mode)
-        assert c.convert_new()["converted"] == 2
-        srcs[mode] = c.read_landing()
-    a, b = srcs["direct"], srcs["spark"]
+    """The landing's worker-side pyarrow conversion (no JVM rows) must
+    land the SAME schema and values as the decoded frame written by
+    Spark's own parquet writer — the direct path is a pure
+    execution-shape change."""
+    src = tmp_path / "avro"
+    src.mkdir()
+    _write_avro(src, "k1_oracle-backfill_0.avro", _events(0, 20, SNAP))
+    _write_avro(src, "k1_oracle-cdc-logminer_1.avro", _events(20, 25))
+    c = AvroLandingConverter(spark, str(src), str(tmp_path / "landing"))
+    assert c.convert_new()["converted"] == 2
+    a = c.read_landing()
+    out = str(tmp_path / "spark_written")
+    avro_ocf.read_avro_changes(spark, str(src)) \
+        .write.mode("overwrite").parquet(out)
+    b = spark.read.parquet(out)
     assert a.schema == b.schema
     cols = sorted(c for c in a.columns if c != "_source_file")
     ra = sorted(tuple(r) for r in a.select(*cols).collect())

@@ -296,8 +296,8 @@ def test_plain_fixed_decodes_as_bytes():
 
 
 def _varied_event(i):
-    """Exercise every branch the wavefront decoder dispatches on:
-    mixed nulls, string-branch sort keys, long-vs-string unions."""
+    """Exercise every branch the C kernel dispatches on: mixed nulls,
+    string-branch sort keys, long-vs-string unions."""
     e = _event(f"v{i:05d}", CDC if i % 2 else SNAP,
                None if i % 2 == 0 else "UPDATE", i,
                None if i % 11 == 0 else f"emp{i}",
@@ -312,50 +312,93 @@ def _varied_event(i):
     return e
 
 
-def test_vector_and_scalar_decoders_identical(spark, tmp_path):
-    """The wavefront (avro_vector) and closure-tree decode paths must
+def test_ckernel_and_scalar_decoders_identical(spark, tmp_path):
+    """The C kernel (avro_ckernel) and closure-tree decode paths must
     produce byte-identical frames; a tiny sync interval makes even this
-    small fixture multi-block so the vector path genuinely runs."""
-    from datastream_delta_plugins_spark.sources import avro_vector
+    small fixture multi-block so the kernel's block loop runs."""
+    from datastream_delta_plugins_spark.sources import avro_ckernel
+    if not avro_ckernel.available():
+        pytest.skip("no C compiler in this environment")
 
     recs = [_varied_event(i) for i in range(400)]
     blob = avro_ocf.write_ocf(ENVELOPE, recs, sync_interval=512)
-    meta, counts, _ = avro_vector.scan_blocks(blob)
-    assert len(counts) >= avro_vector.MIN_LANES, "fixture must be multi-block"
-    d = tmp_path / "vec"
+    meta, counts, _ = avro_ocf.scan_blocks(blob)
+    assert len(counts) > 1, "fixture must be multi-block"
+    d = tmp_path / "ck"
     d.mkdir()
     (d / "k1_oracle-cdc-logminer_0.avro").write_bytes(blob)
 
-    fast = avro_ocf.read_avro_changes(spark, str(d), decoder="vector") \
+    native = avro_ocf.read_avro_changes(spark, str(d), decoder="ckernel") \
         .orderBy("uuid").collect()
     slow = avro_ocf.read_avro_changes(spark, str(d), decoder="scalar") \
         .orderBy("uuid").collect()
-    assert len(fast) == len(slow) == 400
-    assert fast == slow
-    from datastream_delta_plugins_spark.sources import avro_ckernel
-    if avro_ckernel.available():
-        native = avro_ocf.read_avro_changes(
-            spark, str(d), decoder="ckernel").orderBy("uuid").collect()
-        assert native == slow
+    assert len(native) == len(slow) == 400
+    assert native == slow
+    with pytest.raises(ValueError, match="unknown decoder"):
+        avro_ocf.read_avro_changes(spark, str(d), decoder="vector")
 
 
-def test_vector_decoder_falls_back_on_single_block(spark, tmp_path):
-    """A single-block file (no lanes) must silently use the closure
-    decoder under decoder='auto' and still parse correctly."""
-    from datastream_delta_plugins_spark.sources import avro_vector
-
+def test_single_block_file_auto_matches_scalar(spark, tmp_path):
+    """A single-block file under decoder='auto' must decode exactly as
+    the closure-tree reference does."""
     recs = [_varied_event(i) for i in range(120)]
     blob = avro_ocf.write_ocf(ENVELOPE, recs, sync_interval=0)
-    meta, counts, _ = avro_vector.scan_blocks(blob)
+    meta, counts, _ = avro_ocf.scan_blocks(blob)
     assert len(counts) == 1
-    import pytest as _pytest
-    with _pytest.raises(avro_vector.Unsupported):
-        avro_vector.decode_columnar(blob)
     d = tmp_path / "single"
     d.mkdir()
     (d / "k1_oracle-cdc-logminer_0.avro").write_bytes(blob)
-    rows = avro_ocf.read_avro_changes(spark, str(d)).collect()
-    assert len(rows) == 120
+    auto = avro_ocf.read_avro_changes(spark, str(d)) \
+        .orderBy("uuid").collect()
+    ref = avro_ocf.read_avro_changes(spark, str(d), decoder="scalar") \
+        .orderBy("uuid").collect()
+    assert len(auto) == 120
+    assert auto == ref
+
+
+def test_auto_without_compiler_falls_back_and_warns_once(
+        spark, tmp_path, monkeypatch, caplog):
+    """With no C compiler, decoder='auto' must decode every file on the
+    closure tree, identically to decoder='scalar', and the process must
+    log the fallback once."""
+    import logging
+
+    import pyarrow as pa
+
+    from datastream_delta_plugins_spark.sources import avro_ckernel
+    d = tmp_path / "nokernel"
+    d.mkdir()
+    paths, blobs = [], []
+    for k in range(2):
+        blob = avro_ocf.write_ocf(
+            ENVELOPE, [_varied_event(i) for i in range(k * 60, k * 60 + 60)],
+            sync_interval=512)
+        path = d / f"k1_oracle-cdc-logminer_{k}.avro"
+        path.write_bytes(blob)
+        paths.append(str(path))
+        blobs.append(blob)
+    batches = [pa.RecordBatch.from_arrays(
+        [pa.array(paths), pa.array(blobs, pa.binary())],
+        names=["path", "content"])]
+    _, auto, _ = avro_ocf._arrow_decode_plan(spark, str(d))
+    _, scalar, _ = avro_ocf._arrow_decode_plan(spark, str(d),
+                                               decoder="scalar")
+    want = list(scalar(batches))
+
+    # a fresh process with no `cc` on PATH and no cached kernel build
+    monkeypatch.setattr(avro_ckernel, "_LIB", None)
+    monkeypatch.setattr(avro_ckernel, "_LIB_TRIED", False)
+    monkeypatch.setattr(avro_ckernel.tempfile, "gettempdir",
+                        lambda: str(tmp_path))
+    monkeypatch.setenv("PATH", str(tmp_path / "no-bin"))
+    with caplog.at_level(logging.WARNING, logger=avro_ckernel.__name__):
+        got = list(auto(batches))
+    assert not avro_ckernel.available()
+    assert len(got) == len(want) == 2
+    assert all(g.equals(w) for g, w in zip(got, want))
+    fallback = [r for r in caplog.records
+                if "closure tree" in r.getMessage()]
+    assert len(fallback) == 1, caplog.text
 
 
 def test_ckernel_rejects_corrupt_blocks():
@@ -421,13 +464,12 @@ def test_huge_block_record_count_rejected_every_tier():
     rejected by bounds checking on EVERY decode tier — unguarded it
     spins the per-record loop (and sizes output allocations) off the
     claimed count (executor CPU/memory DoS, round-5 ADVICE)."""
-    from datastream_delta_plugins_spark.sources import (
-        avro_ckernel, avro_vector)
+    from datastream_delta_plugins_spark.sources import avro_ckernel
     blob = _craft_ocf(_SIMPLE, 2**60, _enc_longs(7))
     with pytest.raises(ValueError, match="corrupt Avro block"):
         avro_ocf.read_ocf(blob)
     with pytest.raises(ValueError, match="corrupt Avro block"):
-        avro_vector.scan_blocks(blob)  # guards vector AND ckernel
+        avro_ocf.scan_blocks(blob)  # the block scan the C kernel uses
     if avro_ckernel.available():
         with pytest.raises(ValueError, match="corrupt Avro block"):
             avro_ckernel.decode_columnar(blob)
@@ -508,7 +550,7 @@ def test_no_jvm_projection_above_python_decode(spark, tmp_path):
         f"decode output is no longer the plan root: {first!r}"
 
 
-@pytest.mark.parametrize("tier", ["scalar", "vector", "ckernel"])
+@pytest.mark.parametrize("tier", ["scalar", "ckernel"])
 def test_fuzzed_mutations_never_hang_or_crash(tier):
     """Byte-flip fuzz over a valid null-codec OCF: every decode tier
     either succeeds or raises a controlled error — never hangs, never
@@ -516,8 +558,7 @@ def test_fuzzed_mutations_never_hang_or_crash(tier):
     corruption (sync markers, varints, block headers, record bodies)."""
     import random
 
-    from datastream_delta_plugins_spark.sources import (
-        avro_ckernel, avro_vector)
+    from datastream_delta_plugins_spark.sources import avro_ckernel
     if tier == "ckernel" and not avro_ckernel.available():
         pytest.skip("no C compiler")
     recs = [_varied_event(i) for i in range(40)]
@@ -532,12 +573,9 @@ def test_fuzzed_mutations_never_hang_or_crash(tier):
         try:
             if tier == "scalar":
                 avro_ocf.read_ocf(data)
-            elif tier == "vector":
-                avro_vector.decode_columnar(data)
             else:
                 avro_ckernel.decode_columnar(data)
         except (ValueError, EOFError, KeyError, OverflowError,
-                UnicodeDecodeError, avro_vector.Unsupported,
-                avro_ckernel.Unsupported, IndexError, OSError,
+                UnicodeDecodeError, avro_ckernel.Unsupported, IndexError, OSError,
                 MemoryError, TypeError):
             pass  # controlled rejection is a pass; hangs/crashes fail

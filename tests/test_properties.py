@@ -15,6 +15,7 @@ Two core invariants:
 import datetime
 from decimal import Decimal
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -377,9 +378,9 @@ def test_pack_chunks_matches_sequential_fill(spark, lens, budget):
     assert got == want
 
 
-# --- vector decoder equivalence ------------------------------------------
+# --- C-kernel decoder equivalence ---------------------------------------
 
-VECTOR_SCHEMA = {
+COLUMNAR_SCHEMA = {
     "type": "record", "name": "V", "fields": [
         {"name": "id", "type": "long"},
         {"name": "ts", "type": {"type": "long",
@@ -399,7 +400,7 @@ VECTOR_SCHEMA = {
     ],
 }
 
-vector_records = st.fixed_dictionaries({
+columnar_records = st.fixed_dictionaries({
     "id": st.integers(min_value=-(2 ** 63), max_value=2 ** 63 - 1),
     "ts": st.integers(min_value=0, max_value=2 ** 52),
     "s": st.none() | st.text(max_size=50),
@@ -417,38 +418,25 @@ vector_records = st.fixed_dictionaries({
 })
 
 
-@given(recs=st.lists(vector_records, min_size=1, max_size=25),
+@given(recs=st.lists(columnar_records, min_size=1, max_size=25),
        codec=st.sampled_from(["null", "deflate"]),
        sync=st.sampled_from([48, 200, 1000]))
 @settings(max_examples=60, deadline=None)
-def test_vector_decoder_matches_closure_decoder(recs, codec, sync):
-    """The wavefront columnar decoder must agree with the closure-tree
+def test_ckernel_decoder_matches_closure_decoder(recs, codec, sync):
+    """The C-kernel columnar decoder must agree with the closure-tree
     decoder on arbitrary records over the supported subset, at every
-    block granularity (union branches, nulls, decimals, nested records,
-    string/long union arrays, flat varint windows)."""
-    import pyarrow as pa
+    block granularity, single-block files included (union branches,
+    nulls, decimals, nested records, string/long union arrays)."""
+    from datastream_delta_plugins_spark.sources import avro_ckernel
+    if not avro_ckernel.available():
+        pytest.skip("no C compiler in this environment")
 
-    from datastream_delta_plugins_spark.sources import avro_vector
-
-    raw = avro_ocf.write_ocf(VECTOR_SCHEMA, recs, codec=codec,
+    raw = avro_ocf.write_ocf(COLUMNAR_SCHEMA, recs, codec=codec,
                              sync_interval=sync)
     _, ref = avro_ocf.read_ocf(raw)
-    try:
-        _, n, fin = avro_vector.decode_columnar(raw)
-    except avro_vector.Unsupported:
-        # a draw whose block shape has no lanes (tiny sync windows can
-        # still produce a one-block file for 1-2 records) — the auto
-        # path falls back to the closure decoder there by design
-        return
+    _, n, fin = avro_ckernel.decode_columnar(raw)
     assert n == len(ref)
     _check_decoded(fin, ref)
-
-    # the native (C) tier must agree too, wherever it's available
-    from datastream_delta_plugins_spark.sources import avro_ckernel
-    if avro_ckernel.available():
-        _, n2, fin2 = avro_ckernel.decode_columnar(raw)
-        assert n2 == len(ref)
-        _check_decoded(fin2, ref)
 
 
 def _check_decoded(fin, ref):

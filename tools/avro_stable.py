@@ -6,9 +6,10 @@ contention. This harness removes the ambiguity instead of the code:
 
 - WAITS for a quiet window (1-min loadavg < ``--gate``, default 2.0)
   before every sample, up to ``--max-wait`` seconds;
-- takes best-of-N (default 5) of the SAME fixture bench.py times
-  (32 replicated ~20 MB OCF files, noop sink, throughput normalized
-  by uncompressed record bytes);
+- builds bench.py's fixture ONCE (bench.write_avro_fixture: 32
+  replicated ~20 MB OCF files) and takes best-of-N (default 5) of
+  bench.time_avro_decode over it (noop sink, throughput normalized by
+  uncompressed record bytes);
 - emits one JSON line with per-sample rates AND the loadavg observed
   around each sample, so the number is self-adjudicating.
 
@@ -53,22 +54,19 @@ def main() -> None:
 
     import bench
     from datastream_delta_plugins_spark.session import get_spark
-    from datastream_delta_plugins_spark.sources import avro_ocf
 
     spark = get_spark("avro_stable", cpus=int(
         os.environ.get("SPARK_GRAFT_CPUS", "32")))
 
-    # same fixture as bench.avro_decode_mb_s, built once
-    blob_dir = tempfile.mkdtemp(prefix="avro_stable_")
+    fixture_dir = tempfile.mkdtemp(prefix="avro_stable_")
     samples = []
     try:
-        # reuse bench's generator by running its one-shot once to warm
-        # (and to fail fast on any fixture problem), then sample with
-        # the load gate between attempts
+        total_mb = bench.write_avro_fixture(fixture_dir)
         for i in range(args.n):
             load_before = wait_quiet(args.gate, args.max_wait)
             t0 = time.time()
-            rate, conv = bench.avro_decode_mb_s(spark)
+            rate, conv = bench.time_avro_decode(spark, fixture_dir,
+                                                total_mb)
             samples.append({
                 "decode_mb_s": round(rate, 1),
                 "convert_mb_s": round(conv, 1),
@@ -87,7 +85,7 @@ def main() -> None:
             "samples": samples,
         }))
     finally:
-        shutil.rmtree(blob_dir, ignore_errors=True)
+        shutil.rmtree(fixture_dir, ignore_errors=True)
         spark.stop()
 
 

@@ -1,14 +1,16 @@
-"""Round-11 measurement harness (guide §1: measure first).
+"""Per-round plan and job-census harness (measure first).
 
 For each headline bench query: capture `.explain("formatted")` to
-plans/r11/<short>_<label>.txt, then run it to the noop sink under a
+plans/<round>/<short>_<label>.txt, then run it to the noop sink under a
 dedicated job group and record per-query wall time, Spark job count,
 stage count, and task count (the job-floor accounting the optimization
 round needs: local-mode job launches cost ~60-90 ms each, so the
 job/stage census says how much of a 0.3 s query is scheduling).
 
-Usage: python tools/measure_r11.py [label] [passes]
-Writes plans to plans/r11/ and prints one JSON line with the census.
+Usage: python tools/measure.py <round> [label] [passes]
+  e.g. python tools/measure.py r12 before 3
+Writes plans to plans/<round>/ and prints one JSON line with the
+census.
 """
 
 from __future__ import annotations
@@ -27,8 +29,11 @@ from datastream_delta_plugins_spark.session import (  # noqa: E402
 
 
 def main() -> None:
-    label = sys.argv[1] if len(sys.argv) > 1 else "before"
-    passes = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    label = sys.argv[2] if len(sys.argv) > 2 else "before"
+    passes = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     input_bytes = sum(
@@ -36,11 +41,11 @@ def main() -> None:
         for r, _, fs in os.walk(sf_dir) for f in fs)
     sp = (int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0"))
           or sized_shuffle_partitions(input_bytes, cpus))
-    spark = get_spark("measure_r11", shuffle_partitions=sp)
+    spark = get_spark(f"measure_{rnd}", shuffle_partitions=sp)
     sc = spark.sparkContext
     bench_dir = bench._split_bench_inputs(spark, sf_dir)
 
-    plans_dir = os.path.join(REPO, "plans", "r11")
+    plans_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(plans_dir, exist_ok=True)
 
     def noop(df):
