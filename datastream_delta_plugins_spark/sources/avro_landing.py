@@ -61,7 +61,8 @@ import os
 import re
 import time
 
-from ..streaming.commitlog import attempt_name_re, attempt_unique_name
+from ..streaming.commitlog import (ConcurrentWriterError, attempt_name_re,
+                                   attempt_unique_name)
 from .avro_ocf import convert_avro_to_parquet
 
 LOG_SUBDIR = "_landing_log"
@@ -263,10 +264,13 @@ class AvroLandingConverter:
             # manifest)
             bdir = attempt_unique_name("b", batch)
             out = os.path.join(self.data_dir, bdir)
-            convert_avro_to_parquet(
-                self.spark, new, out, columns=self.columns,
-                avro_schema=self.avro_schema)
-            schema = self.spark.read.parquet(out).schema
+
+            def write():
+                convert_avro_to_parquet(
+                    self.spark, new, out, columns=self.columns,
+                    avro_schema=self.avro_schema)
+                return self.spark.read.parquet(out).schema
+            schema = self._write_attempt(ver, write)
             ctx.update(files=new, bdir=bdir, schema=schema, stamp=batch)
         now = time.time()
         segments = self._updated_segments(committed, new, now,
@@ -281,6 +285,22 @@ class AvroLandingConverter:
             "batch_dirs": committed["batch_dirs"] + [bdir],
             "schemas": schemas})
         return {"converted": len(new), "batch_dir": bdir}
+
+    def _write_attempt(self, ver: int, write):
+        """Run the data write of an attempt planned against version
+        ``ver``. Once the log moves past the attempt's stamp, vacuum()
+        may collect its still-unreferenced dir mid-write; such an
+        attempt could never commit (its version is taken), so a write
+        that fails after the log moved on is the conflict occ_retry
+        re-plans, not an error for the caller."""
+        try:
+            return write()
+        except Exception as e:
+            if self.clog.version() > ver:
+                raise ConcurrentWriterError(
+                    f"landing at {self.landing_dir} moved past version "
+                    f"{ver} while this attempt wrote its data") from e
+            raise
 
     def _updated_segments(self, committed: dict, new: list[str],
                           now: float, present: set[str],
@@ -413,8 +433,8 @@ class AvroLandingConverter:
         df = self._read_dirs(committed, dirs)
         batch = ver + 1
         bdir = attempt_unique_name("b", batch)
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.data_dir, bdir))
+        self._write_attempt(ver, lambda: df.write.mode("overwrite")
+                            .parquet(os.path.join(self.data_dir, bdir)))
         # segments ride through unchanged from the SAME read the plan
         # used; commit_at makes any racing advance (e.g. a converter's
         # new batch, absent from our rewrite) a conflict that re-plans
@@ -452,7 +472,9 @@ class AvroLandingConverter:
             # reusing its decode (stamp == cur; convert_new's reuse
             # condition mirrors this bound). Only strictly-older
             # orphans are collectable; they become so as soon as any
-            # commit advances past their stamp.
+            # commit advances past their stamp (a writer still writing
+            # one is doomed anyway: _write_attempt reports its failed
+            # write as the conflict).
             if m and d not in live and int(m.group(1)) < cur:
                 self.data_store.delete(k)
                 if d not in dead_dirs:

@@ -146,6 +146,8 @@ class BucketedStateTable:
         # bytes through its own connectors as in any deployment
         self.data_store = data_store or PosixStore()
         self.occ_retries = occ_retries
+        # read handle: (sorted committed bucket dirs, DataFrame over them)
+        self._read_handle: tuple[tuple[str, ...], DataFrame] | None = None
         if not isinstance(self.clog, ObjectStoreLog):
             os.makedirs(os.path.join(path, "manifest"), exist_ok=True)
         self._adopt_legacy_layout()
@@ -178,17 +180,20 @@ class BucketedStateTable:
 
     # -- manifest plumbing --
 
-    def version(self) -> int:
+    def _check_bucketed_layout(self) -> None:
         # the versioned backend keeps its commit log under commitlog/;
         # finding one here means the dir was written by THAT backend —
         # fail with the real cause instead of a FileNotFoundError deep
         # in a merge (the mirror check lives in
-        # CdcPipeline._current_version)
+        # CdcPipeline._check_versioned_layout)
         if os.path.isdir(os.path.join(self.path, "commitlog")):
             raise ValueError(
                 f"state dir {self.path} was written by the versioned "
                 f"state backend; a table cannot switch backends in "
                 f"place")
+
+    def version(self) -> int:
+        self._check_bucketed_layout()
         return self.clog.version()
 
     def _manifest(self, v: int) -> dict[str, str]:
@@ -209,8 +214,9 @@ class BucketedStateTable:
         return doc["buckets"]
 
     def current_manifest(self) -> dict[str, str]:
-        v = self.version()
-        return {} if v < 0 else self._manifest(v)
+        self._check_bucketed_layout()
+        rc = self.clog.read_committed()  # one log read
+        return {} if rc is None else self._manifest_doc(rc[1])
 
     def _commit(self, buckets: dict[str, str],
                 at_version: int | None = None) -> int:
@@ -233,8 +239,23 @@ class BucketedStateTable:
                 .parquet(*paths))
 
     def read(self) -> DataFrame | None:
-        """Current state (all buckets), or None before the first commit."""
-        return self._read_dirs(sorted(self.current_manifest().values()))
+        """Current state (all buckets), or None before the first commit.
+
+        Returns ONE analyzed DataFrame per committed manifest: while
+        the manifest names the same bucket dirs, every call returns the
+        same object, and a call costs one manifest read and no Spark
+        job — the ``mergeSchema`` footer merge runs once per manifest,
+        not once per read. The handle refreshes when a commit (from
+        this or any other instance) changes the bucket-dir set; bucket
+        dirs are attempt-unique and never rewritten, so a hit is never
+        stale."""
+        dirs = tuple(sorted(self.current_manifest().values()))
+        handle = self._read_handle
+        if handle is not None and handle[0] == dirs:
+            return handle[1]
+        df = self._read_dirs(dirs)
+        self._read_handle = None if df is None else (dirs, df)
+        return df
 
     # -- open-table-format export --
 

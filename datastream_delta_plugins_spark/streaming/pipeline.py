@@ -12,9 +12,14 @@ Replaces the reference's 30-second ScanTask executor loop
     checkpoint guarantees each file exactly once, and merge_batch is
     sort-key-correct for out-of-order arrivals, so no rescan is needed.
     The 72h watermark shows up in the windowed/dedup streaming ops.
-  - state table: versioned parquet directory (state/v{N}) with an
-    atomically-swapped CURRENT pointer — a poor-man's Delta commit log;
-    swap to `MERGE INTO` on Delta/Iceberg in production.
+  - state table: each merge writes the full state to a new
+    attempt-unique parquet dir (state/v{N}-{nonce}, never rewritten)
+    and commits its name through the commit log (streaming/commitlog.py)
+    — a poor-man's Delta commit log; swap to `MERGE INTO` on
+    Delta/Iceberg in production. Readers get one analyzed DataFrame per
+    committed version (`CdcPipeline.read_state`): the committing
+    instance seeds it with the written schema, so no read of a
+    committed version runs a parquet schema-inference job.
   - schema drift (D3): each batch's payload fingerprint is compared to
     the stored `{t}.schema.key`; new columns are added to the state
     nullable (mergeSchema semantics), and the drift is recorded.
@@ -181,10 +186,12 @@ class CdcPipeline:
         # retry/backoff classification around each micro-batch merge
         # (Utils.java:901-925 analog); None = fail on first error
         self.retry = retry
+        # versioned read handle: (committed data_dir, DataFrame over it)
+        self._state_handle: tuple[str, DataFrame] | None = None
 
-    # -- state table (versioned parquet + CURRENT pointer) --
+    # -- state table (versioned parquet dirs behind the commit log) --
 
-    def _current_version(self) -> int:
+    def _check_versioned_layout(self) -> None:
         # a manifest/ dir marks the bucketed layout — refuse to read it
         # as a versioned table (the mirror check lives in
         # BucketedStateTable.version)
@@ -193,17 +200,36 @@ class CdcPipeline:
                 f"state dir {self.state_dir} was written by the "
                 f"bucketed state backend; a table cannot switch "
                 f"backends in place")
+
+    def _current_version(self) -> int:
+        self._check_versioned_layout()
         return self.clog.version()
 
     def read_state(self) -> DataFrame | None:
+        """The committed state, or None before the first commit.
+
+        Returns ONE analyzed DataFrame per committed version: while the
+        commit log still names the same data dir, every call returns
+        the same object, and a call costs one commit-log read (a LIST
+        on the ``log`` impls) and no Spark job. The handle refreshes
+        when the log names a new dir — a commit by this instance (which
+        seeds it, see ``_write_state``) or by any other writer. Never
+        stale: committed dirs are attempt-unique and never rewritten.
+        A cold handle (restart, another writer's commit) costs one
+        ``spark.read.parquet`` with its schema-inference job."""
         if self.bstate is not None:
             return self.bstate.read()
-        v = self._current_version()
-        if v < 0:
+        self._check_versioned_layout()
+        rc = self.clog.read_committed()
+        if rc is None:
             return None
-        committed = self.clog.read_committed()[1]
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, committed["data_dir"]))
+        dname = rc[1]["data_dir"]
+        handle = self._state_handle
+        if handle is not None and handle[0] == dname:
+            return handle[1]
+        df = self.spark.read.parquet(os.path.join(self.state_dir, dname))
+        self._state_handle = (dname, df)
+        return df
 
     def _write_state(self, df: DataFrame) -> str:
         """Write the next state version and commit it; returns the
@@ -230,6 +256,13 @@ class CdcPipeline:
         # state every micro-batch
         self.clog.commit_at(v, {"data_dir": dname,
                                 "n_rows": _parquet_footer_rows(path)})
+        # committed: seed the read handle with a fresh read of the dir
+        # under the schema just written (no inference job). Never
+        # `df` itself — it references the unpersisted micro-batch — and
+        # never before commit_at: a writer that loses the race must
+        # not hold a handle on its orphan dir
+        self._state_handle = (
+            dname, self.spark.read.schema(df.schema).parquet(path))
         # keep current + previous: everything stamped v-2 — the
         # superseded committed dir AND any loser/crash orphans of that
         # version — ages out now, via two PREFIX-scoped listings
@@ -499,6 +532,7 @@ class CdcPipeline:
         self.doc.put(state_keys.k_state_backend(self.table), "bucketed")
         self.doc.save()
         self.bstate = b
+        self._state_handle = None  # reads go to the bucketed table now
         if self.catalog_table:
             b.sync_catalog(
                 self.catalog_table,

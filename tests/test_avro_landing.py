@@ -514,6 +514,41 @@ def test_landing_drift_merges_schema_vintages(spark, tmp_path):
     assert rows[0] is None  # pre-drift vintage null-fills
 
 
+def test_write_failing_after_log_moved_on_is_a_conflict(spark, tmp_path,
+                                                        monkeypatch):
+    """vacuum() may collect a slow attempt's dir mid-write once the log
+    has moved past its stamp. That attempt could never commit, so its
+    failed write re-plans like a lost commit (occ_retry) instead of
+    surfacing; a write failure with the log unmoved still raises."""
+    import datastream_delta_plugins_spark.sources.avro_landing as al
+
+    src = tmp_path / "avro"
+    src.mkdir()
+    landing = str(tmp_path / "landing")
+    a = AvroLandingConverter(spark, str(src), landing, commit_impl="log")
+    b = AvroLandingConverter(spark, str(src), landing, commit_impl="log")
+    _write_avro(src, "k1_oracle-cdc-logminer_0.avro", _events(0, 5))
+    real = al.convert_avro_to_parquet
+    calls = {"n": 0}
+
+    def collected_mid_write(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 1:  # a's attempt: b commits first, then the
+            b.convert_new()  # collected dir fails a's write
+            raise OSError("batch dir vanished mid-write")
+        return real(*args, **kwargs)
+    monkeypatch.setattr(al, "convert_avro_to_parquet", collected_mid_write)
+    assert a.convert_new() == {"converted": 0, "batch_dir": None}
+    assert a.read_landing().count() == 5
+
+    def disk_full(*args, **kwargs):
+        raise OSError("disk full")
+    monkeypatch.setattr(al, "convert_avro_to_parquet", disk_full)
+    _write_avro(src, "k1_oracle-cdc-logminer_1.avro", _events(5, 10))
+    with pytest.raises(OSError, match="disk full"):
+        a.convert_new()
+
+
 def test_direct_and_spark_conversion_identical(spark, tmp_path):
     """The landing's worker-side pyarrow conversion (no JVM rows) must
     land the SAME schema and values as the decoded frame written by

@@ -12,6 +12,7 @@ from datastream_delta_plugins_spark.operators import cdc
 from datastream_delta_plugins_spark.streaming.bucketed_state import (
     BucketedStateTable)
 from datastream_delta_plugins_spark.streaming.pipeline import CdcPipeline
+from test_streaming import _jobs_started
 
 COLS = ["id", "val", "_op", "_sk1", "_sk2", "_sk3", "_sk4"]
 
@@ -483,3 +484,73 @@ def test_vacuum_aborts_when_current_payload_vanishes(spark, tmp_path):
     assert maint.vacuum(keep_versions=1) == []   # aborted, not a purge
     wrapped.armed = False
     assert _snap(t.read()) == before             # nothing live deleted
+
+
+# -- the per-manifest read handle --
+
+def test_read_handle_reused_until_manifest_changes(spark, tmp_path):
+    """One analyzed DataFrame per committed manifest: the mergeSchema
+    footer merge runs once, later reads return the same object with no
+    Spark job, and a merge re-points the handle."""
+    t = BucketedStateTable(spark, str(tmp_path / "st"), ["id"], n_buckets=8)
+    t.merge(_batch1(spark))
+    first = t.read()
+    again, jobs = _jobs_started(spark, t.read)
+    assert again is first and jobs == 0
+    t.merge(_batch2(spark))
+    after = t.read()
+    assert after is not first
+    oneshot = cdc.materialize(
+        _batch1(spark).unionByName(_batch2(spark)), ["id"],
+        keep_sort_keys=True)
+    assert _snap(after) == _snap(oneshot)
+    again, jobs = _jobs_started(spark, t.read)
+    assert again is after and jobs == 0
+
+
+def test_pipeline_bucketed_read_state_warm_and_shared(spark, tmp_path):
+    """CdcPipeline over the bucketed backend: a warm read_state()
+    starts no job, and a second instance's commit is visible to the
+    first instance's next read (no stale handle)."""
+    work = str(tmp_path / "work")
+
+    def open_pipe():
+        return CdcPipeline(spark, "t1", str(tmp_path / "src"), work,
+                           ["id"], state_backend="bucketed",
+                           n_state_buckets=8)
+
+    a = open_pipe()
+    a.apply_batch(_batch1(spark), 0, streaming_barrier=False)
+    warm = a.read_state()
+    again, jobs = _jobs_started(spark, a.read_state)
+    assert again is warm and jobs == 0
+
+    b = open_pipe()
+    b.apply_batch(_batch2(spark), 1, streaming_barrier=False)
+    fresh = a.read_state()
+    assert fresh is not warm
+    oneshot = cdc.materialize(
+        _batch1(spark).unionByName(_batch2(spark)), ["id"],
+        keep_sort_keys=True)
+    assert _snap(fresh) == _snap(oneshot)
+
+
+def test_auto_migration_moves_read_state_to_bucketed(spark, tmp_path):
+    """A warm versioned handle does not outlive the auto backend's
+    switch: after the migration read_state() serves the bucketed
+    table's files and rows."""
+    work = str(tmp_path / "w")
+    pipe = CdcPipeline(spark, "t1", str(tmp_path / "src"), work, ["id"],
+                       auto_bucket_rows=60, n_state_buckets=4)
+    pipe.apply_batch(_batch1(spark), 0, streaming_barrier=False)
+    assert pipe.bstate is None
+    assert pipe.read_state().count() == 50  # warm versioned handle
+    big = _batch1(spark).withColumn("id", F.col("id") + 100)
+    pipe.apply_batch(big, 1, streaming_barrier=False)
+    assert pipe.bstate is not None
+    assert pipe._state_handle is None
+    st = pipe.read_state()
+    assert st is pipe.bstate.read()
+    assert all("/state_bucketed/" in f for f in st.inputFiles())
+    assert _snap(st) == _snap(cdc.materialize(
+        _batch1(spark).unionByName(big), ["id"], keep_sort_keys=True))

@@ -3,6 +3,7 @@ availableNow triggers, checkpointed incremental merges, late data,
 schema drift, windowed aggregation, stateful dedup."""
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F, types as T
@@ -821,6 +822,13 @@ def test_versioned_dual_writer_conflicts_and_preserves_winner(
     st = a.read_state()
     assert st.count() == 1
     committed = a.clog.read_committed()[1]["data_dir"]
+    # the loser holds no handle on its orphan dir: its read follows the
+    # log to the winner's rows
+    assert b._state_handle is None
+    lost = b.read_state()
+    assert [tuple(r) for r in lost.select("id", "val").collect()] \
+        == [(1, "a")]
+    assert all(f"/{committed}/" in f for f in lost.inputFiles())
     files = {f for f in os.listdir(os.path.join(work, "state", committed))
              if f.endswith(".parquet")}
     assert files, "winner's data dir must still hold its parquet"
@@ -835,3 +843,123 @@ def test_versioned_dual_writer_conflicts_and_preserves_winner(
     left = [d for d in os.listdir(os.path.join(work, "state"))
             if d.startswith("v0")]
     assert left == []  # both the superseded winner AND the orphan
+
+
+# -- the per-version read handle --
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started), via a job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    saved = {k: sc.getLocalProperty(k) for k in
+             ("spark.jobGroup.id", "spark.job.description",
+              "spark.job.interruptOnCancel")}
+    sc.setJobGroup(group, "probe")
+    try:
+        out = fn()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _batch(spark, *evts):
+    return spark.createDataFrame(_rows(*evts), CHANGE_SCHEMA)
+
+
+def _live(df):
+    return sorted((r["id"], r["val"])
+                  for r in df.where(~F.col("_is_deleted")).collect())
+
+
+def test_read_state_handle_reused_until_next_commit(spark, tmp_path):
+    """One analyzed DataFrame per committed version: repeated reads
+    return the same object and start no Spark job; a commit replaces
+    it with a handle on the new version."""
+    src = str(tmp_path / "src")
+    pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], state_backend="versioned")
+    assert pipe.read_state() is None
+    pipe.apply_batch(_batch(spark, ("oracle-backfill", None, 0, 1, "a"),
+                            ("oracle-backfill", None, 0, 2, "b")),
+                     0, streaming_barrier=False)
+    # the commit seeded the handle: even the first read runs no job
+    first, jobs = _jobs_started(spark, pipe.read_state)
+    assert jobs == 0
+    again, jobs = _jobs_started(spark, pipe.read_state)
+    assert again is first and jobs == 0
+    assert _live(first) == [(1, "a"), (2, "b")]
+
+    pipe.apply_batch(_batch(spark, ("oracle-cdc-logminer", "UPDATE", 5,
+                                    1, "a2")), 1, streaming_barrier=False)
+    after = pipe.read_state()
+    assert after is not first
+    assert _live(after) == [(1, "a2"), (2, "b")]
+    assert pipe.read_state() is after
+
+    # a cold instance (restart) infers once per version, then reuses
+    cold = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], state_backend="versioned")
+    handle = cold.read_state()
+    assert _live(handle) == [(1, "a2"), (2, "b")]
+    again, jobs = _jobs_started(spark, cold.read_state)
+    assert again is handle and jobs == 0
+
+
+def test_read_state_sees_another_instances_commit(spark, tmp_path):
+    """A warm handle is never stale: once a second pipeline instance
+    on the same work dir commits, the first instance's read returns
+    the new version's rows."""
+    src = str(tmp_path / "src")
+    work = str(tmp_path / "work")
+    a = CdcPipeline(spark, "t1", src + "/*", work, pk_cols=["id"],
+                    state_backend="versioned")
+    a.apply_batch(_batch(spark, ("oracle-backfill", None, 0, 1, "a")),
+                  0, streaming_barrier=False)
+    warm = a.read_state()
+    assert _live(warm) == [(1, "a")]
+
+    b = CdcPipeline(spark, "t1", src + "/*", work, pk_cols=["id"],
+                    state_backend="versioned")
+    b.apply_batch(_batch(spark, ("oracle-cdc-logminer", "INSERT", 5,
+                                 2, "b")), 1, streaming_barrier=False)
+    fresh = a.read_state()
+    assert fresh is not warm
+    assert _live(fresh) == [(1, "a"), (2, "b")]
+    assert all(f"/{b.clog.read_committed()[1]['data_dir']}/" in f
+               for f in fresh.inputFiles())
+
+
+def test_seeded_handle_schema_equals_inferred(spark, tmp_path):
+    """The handle a commit seeds carries the schema Spark infers for
+    the committed dir: after the initial materialize, after a merge,
+    and after a drift batch that goes through ``_evolve``."""
+    src = str(tmp_path / "src")
+    pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], state_backend="versioned")
+
+    def check():
+        seeded, jobs = _jobs_started(spark, pipe.read_state)
+        assert jobs == 0  # the seeded handle, not a fresh inference
+        committed = pipe.clog.read_committed()[1]["data_dir"]
+        assert seeded.schema == spark.read.parquet(
+            os.path.join(pipe.state_dir, committed)).schema
+        return seeded
+
+    pipe.apply_batch(_batch(spark, ("oracle-backfill", None, 0, 1, "a")),
+                     0, streaming_barrier=False)
+    check()
+    pipe.apply_batch(_batch(spark, ("oracle-cdc-logminer", "UPDATE", 5,
+                                    1, "a2")), 1, streaming_barrier=False)
+    check()
+    drifted = T.StructType(list(CHANGE_SCHEMA.fields)
+                           + [T.StructField("extra", T.LongType())])
+    rows = [r + (7,) for r in _rows(("oracle-cdc-logminer", "INSERT", 9,
+                                     2, "b"))]
+    pipe.apply_batch(spark.createDataFrame(rows, drifted), 2,
+                     streaming_barrier=False)
+    seeded = check()
+    assert "extra" in seeded.columns
+    got = {r["id"]: (r["val"], r["extra"]) for r in seeded.collect()}
+    assert got == {1: ("a2", None), 2: ("b", 7)}
