@@ -18,6 +18,16 @@ is strictly less shuffle than the window/row_number formulation (which
 must shuffle every event to sort it); the window strategy is kept for
 when the full ordered history per PK is needed downstream.
 
+Folding a batch into an existing state (`merge_batch`) is one pass: the
+batch's winners (that same `max_by`, one row per PK) full-outer-join the
+state on the PK, and each output row takes the side whose sort-key
+struct is greater — the batch on a tie. One scan of the state, two
+exchanges (the batch aggregate and the state side of the join).
+
+Plans are built from SQL expression strings (`selectExpr`/`F.expr` over
+backtick-quoted names): one py4j round trip per operator instead of one
+per column, which is most of a small batch's driver-side planning time.
+
 Requires sort keys to totally order events within a PK (the reference
 guarantees this: Oracle [source_timestamp, scn, rs_id, ssn]).
 """
@@ -42,17 +52,44 @@ def payload_columns(changes: DataFrame) -> list[str]:
     return [c for c in changes.columns if c not in _NON_PAYLOAD]
 
 
-def _sort_key_expr(sort_cols: Sequence[str]):
-    """Ordering struct for max_by. Spark's struct ordering already
-    ranks a NULL field below every real value of ANY type (the
-    interpreted/codegen orderings compare null < non-null per field),
-    so the raw struct gives exactly the null-safe semantics we need —
-    no sentinel a legitimate value (e.g. a negative numeric key) could
-    undercut, and no extra flag fields doubling the per-row comparison
-    cost in the partial aggregate. The struct itself is never NULL
-    (struct() of null fields is non-null), so max_by never drops a
-    row. Verified by test_sort_key_null_ranks_below_any_value."""
-    return F.struct(*[F.col(c) for c in sort_cols])
+def _q(name: str) -> str:
+    """`name` quoted for a SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _value_columns(df: DataFrame, pk_cols: Sequence[str],
+                   sort_cols: Sequence[str],
+                   keep_sort_keys: bool) -> list[str]:
+    """The non-PK columns a materialized row carries."""
+    out = [c for c in payload_columns(df) if c not in set(pk_cols)]
+    if keep_sort_keys:
+        # a sort col that is ALSO a payload column is already carried —
+        # appending it again would make the value struct's field
+        # ambiguous
+        out += [c for c in sort_cols if c not in out]
+    return out
+
+
+def _latest_by_pk(df: DataFrame, pk_cols: Sequence[str],
+                  value_cols: Sequence[str],
+                  sort_cols: Sequence[str]) -> DataFrame:
+    """``pk..., _latest``: per PK, struct(value_cols..., _op) of the
+    event with the greatest struct(sort_cols) — the one definition of
+    the merge's winner, shared by `materialize` and `merge_batch`.
+
+    The ordering struct is the raw sort columns. Spark's struct
+    ordering already ranks a NULL field below every real value of ANY
+    type (the interpreted/codegen orderings compare null < non-null per
+    field), so the raw struct gives exactly the null-safe semantics we
+    need — no sentinel a legitimate value (e.g. a negative numeric key)
+    could undercut, and no extra flag fields doubling the per-row
+    comparison cost in the partial aggregate. The struct itself is
+    never NULL (struct() of null fields is non-null), so max_by never
+    drops a row. Verified by test_sort_key_null_ranks_below_any_value."""
+    value = ", ".join(_q(c) for c in [*value_cols, "_op"])
+    order = ", ".join(_q(c) for c in sort_cols)
+    return df.groupBy(*pk_cols).agg(
+        F.expr(f"max_by(struct({value}), struct({order})) AS _latest"))
 
 
 def materialize(changes: DataFrame,
@@ -76,84 +113,104 @@ def materialize(changes: DataFrame,
     df = changes if "_op" in changes.columns else normalize_ops(changes)
     if dml_blacklist:
         df = df.where(~F.col("_op").isin([o.upper() for o in dml_blacklist]))
-    payload = payload_columns(df)
-    out_cols = [c for c in payload if c not in set(pk_cols)]
-    if keep_sort_keys:
-        # a sort col that is ALSO a payload column is already carried —
-        # appending it again would make the value struct's field
-        # ambiguous
-        out_cols = out_cols + [c for c in sort_cols if c not in out_cols]
+    out_cols = _value_columns(df, pk_cols, sort_cols, keep_sort_keys)
+    is_deleted = f"_op = '{DELETE}' AS _is_deleted"
 
     if strategy == "agg":
-        value = F.struct(*[F.col(c) for c in out_cols], F.col("_op"))
-        latest = (df.groupBy(*pk_cols)
-                    .agg(F.max_by(value, _sort_key_expr(sort_cols))
-                          .alias("_latest")))
-        latest = latest.select(
-            *pk_cols,
-            *[F.col(f"_latest.{c}").alias(c) for c in out_cols],
-            F.col("_latest._op").alias("_op"))
+        latest = _latest_by_pk(df, pk_cols, out_cols, sort_cols).selectExpr(
+            *map(_q, pk_cols),
+            *[f"_latest.{_q(c)} AS {_q(c)}" for c in out_cols],
+            "_latest." + is_deleted)
     elif strategy == "window":
         w = W.partitionBy(*pk_cols).orderBy(*[F.desc(c) for c in sort_cols])
         latest = (df.withColumn("_rn", F.row_number().over(w))
                     .where(F.col("_rn") == 1)
-                    .select(*pk_cols, *out_cols, "_op"))
+                    .selectExpr(*map(_q, [*pk_cols, *out_cols]), is_deleted))
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    latest = latest.withColumn("_is_deleted", F.col("_op") == DELETE)
     if not soft_delete:
-        latest = latest.where(~F.col("_is_deleted")).drop("_is_deleted")
-    return latest.drop("_op")
+        latest = latest.where("NOT _is_deleted").drop("_is_deleted")
+    return latest
 
 
 def merge_batch(state: DataFrame,
                 batch_changes: DataFrame,
                 pk_cols: Sequence[str],
                 sort_cols: Sequence[str] = SORT_KEY_COLS) -> DataFrame:
-    """Incrementally fold a change batch into a sort-key-carrying state
-    (one produced with keep_sort_keys=True).
+    """Fold a change batch into a sort-key-carrying state (one produced
+    with keep_sort_keys=True) in one pass.
 
-    Late-data correct: only PKs touched by the batch are re-merged, and
-    they are re-merged BY SORT KEY against the state's remembered keys,
-    so an out-of-order file cannot overwrite newer state (the
-    reference's 3-day rescan window delivers exactly such files,
-    DatastreamEventReader.java:439-459). Untouched state rows pass
-    through an anti-join against the (broadcast) batch key set — the
-    per-batch cost scales with batch size, not state size.
+    The batch's winners (one row per PK, `_latest_by_pk`) full-outer-
+    join the state on the PK, and each row keeps the side with the
+    greater sort-key struct. The batch wins a tie: equal keys mean a
+    replay of the same event, which is idempotent. `_is_deleted` comes
+    from the winner. Late-data correct: a state row is only replaced by
+    a batch event that sorts at or after it, so an out-of-order file
+    cannot overwrite newer state (the reference's 3-day rescan window
+    delivers exactly such files, DatastreamEventReader.java:439-459).
+
+    Output columns are the state's, in order, then any column only the
+    batch carries; a side that lacks a column reads NULL (mergeSchema
+    semantics — a drifted batch needs no ALTER of the state first).
+
+    Cost: the state is scanned once and shuffled once (the join's state
+    side); the batch is aggregated, and its exchange already partitions
+    it by PK for the join. So this rewrites O(state) — both state
+    backends bound it: versioned by rewriting the whole table, bucketed
+    by passing only the touched buckets as `state`. Nothing is
+    force-broadcast: a typical incremental batch is small, but a
+    backfill batch can carry billions of PKs, and a full outer join
+    cannot broadcast either side anyway. The join's reduce side is as
+    wide as AQE coalesces it: a state shuffle under the advisory
+    partition size (64 MB by default) is joined and written by ONE
+    task. Measured on 4 cores, a 1e6-row state's batch then takes
+    ~1.8x as long as a two-scan merge that writes the untouched rows
+    with the state scan's parallelism (ROADMAP open item 11); at the
+    1e5 rows of `perfbench` cdc-steady the one pass is ~26% faster.
+
+    The batch is the join's LEFT side, so the result belongs to the
+    batch's SparkSession. Keep it so: an `Observation` on a
+    foreachBatch frame only fills when the written frame belongs to
+    that frame's session (with the state on the left, Spark 4.1's
+    `Observation.get` blocked forever).
     """
     missing = [c for c in sort_cols if c not in state.columns]
     if missing:  # a state built without keep_sort_keys=True would
-        # union NULL sort keys, rank below every batch event, and let
+        # join NULL sort keys, rank below every batch event, and let
         # an out-of-order batch silently overwrite newer state — fail
         # loudly instead
         raise ValueError(
             f"state is missing sort key column(s) {missing}: build it "
             f"with materialize(..., keep_sort_keys=True) so merge_batch "
             f"can rank late events against the state's remembered keys")
-    batch_latest = materialize(batch_changes, pk_cols, sort_cols,
-                               keep_sort_keys=True)
-    # No forced broadcast: a typical incremental batch's key set is
-    # small and AQE will broadcast it at runtime, but a backfill batch
-    # can carry billions of PKs — forcing broadcast there would OOM
-    # the driver. AQE picks broadcast vs shuffled semi/anti per batch.
-    keys = batch_latest.select(*pk_cols).distinct()
-    untouched = state.join(keys, list(pk_cols), "left_anti")
-    touched = state.join(keys, list(pk_cols), "left_semi")
-    # replay touched state rows as events and pick the sort-key winner
-    as_events = [
-        touched.withColumn("_op", F.when(F.col("_is_deleted"), F.lit(DELETE))
-                                   .otherwise(F.lit("UPDATE")))
-               .drop("_is_deleted"),
-        batch_latest.withColumn("_op", F.when(F.col("_is_deleted"),
-                                              F.lit(DELETE))
-                                        .otherwise(F.lit("UPDATE")))
-                    .drop("_is_deleted"),
-    ]
-    remerged = materialize(
-        as_events[0].unionByName(as_events[1], allowMissingColumns=True),
-        pk_cols, sort_cols, keep_sort_keys=True)
-    return untouched.unionByName(remerged, allowMissingColumns=True)
+    df = (batch_changes if "_op" in batch_changes.columns
+          else normalize_ops(batch_changes))
+    pk = list(pk_cols)
+    value_cols = _value_columns(df, pk, sort_cols, keep_sort_keys=True)
+    batch_wins = (
+        "(b._latest IS NOT NULL AND "
+        f"struct({', '.join(f'b._latest.{_q(c)}' for c in sort_cols)}) >= "
+        f"struct({', '.join(f's.{_q(c)}' for c in sort_cols)}))")
+    # a missing state row reads as all-NULL sort keys, which rank below
+    # any batch key (and tie an all-NULL one), so batch_wins needs no
+    # separate "state row absent" test
+    from_batch = {c: f"b._latest.{_q(c)}" for c in value_cols}
+    from_batch["_is_deleted"] = f"b._latest._op = '{DELETE}'"
+    in_state = set(state.columns)
+
+    def pick(c: str) -> str:
+        if c in pk:
+            return f"coalesce(b.{_q(c)}, s.{_q(c)}) AS {_q(c)}"
+        s_val = f"s.{_q(c)}" if c in in_state else "NULL"
+        return (f"IF({batch_wins}, {from_batch.get(c, 'NULL')}, {s_val})"
+                f" AS {_q(c)}")
+
+    on = " AND ".join(f"b.{_q(c)} = s.{_q(c)}" for c in pk)
+    out = [*state.columns, *[c for c in from_batch if c not in in_state]]
+    return (_latest_by_pk(df, pk, value_cols, sort_cols).alias("b")
+            .join(state.alias("s"), F.expr(on), "full_outer")
+            .selectExpr(*map(pick, out)))
 
 
 def diff_states(prev: DataFrame | None, cur: DataFrame,

@@ -379,7 +379,7 @@ class AvroLandingConverter:
         written across a payload schema drift carry different schema
         fingerprints in the manifest; the read then unions vintages
         with ``mergeSchema`` — pre-drift batches null-fill the evolved
-        columns (the `_evolve` contract) instead of whichever footer
+        columns (the state merge's contract) instead of whichever footer
         Spark happened to sample planing the new column away."""
         committed = self._committed()
         return self._read_dirs(committed, committed["batch_dirs"])

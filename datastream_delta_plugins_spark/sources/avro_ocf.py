@@ -729,13 +729,19 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
                     v = str(v)  # non-string union branch
                 cols[o].append(v)
             cols["_source_file"].append(fpath)
+        # map fields skip pandas: its inference reads a dict column
+        # as a struct, which Arrow cannot cast to a map
+        maps = {f.name: pa.array(
+            [None if v is None else list(v.items()) for v in cols.pop(
+                f.name)], f.type) for f in base if pa.types.is_map(f.type)}
         out = pd.DataFrame(cols)
         for n, conv in {**meta_conv, **payload_conv}.items():
             if conv is not None and n in out.columns:
                 out[n] = conv(out[n])
         tbl = pa.Table.from_pandas(out, preserve_index=False)
         return _with_ops(pa.RecordBatch.from_arrays(
-            [_to_target(tbl.column(f.name).combine_chunks(), f.type)
+            [maps[f.name] if f.name in maps else
+             _to_target(tbl.column(f.name).combine_chunks(), f.type)
              for f in base], schema=base))
 
     def _to_target(arr, typ):
@@ -775,6 +781,17 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
             out.append(col)
         return out
 
+    def _list_column(shape):
+        """The kernel's {offsets, valid, items} array shape as an Arrow
+        list column; items the kernel hands over as anything but an
+        Arrow array (decimals) take the closure tree."""
+        items = shape["items"]
+        if not isinstance(items, pa.Array):
+            raise avro_ckernel.Unsupported("array of non-Arrow items")
+        return pa.ListArray.from_arrays(
+            pa.array(shape["offsets"], pa.int32()), items,
+            mask=pa.array(~shape["valid"]))
+
     def _assemble(fpath, fschema, n, fin):
         check_drift(fschema, fpath)
         # a field in the READER schema but absent from this file's
@@ -798,6 +815,8 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
         p = fin.get("payload") or {}
         for name, o, _t in payload_out:
             arrays[o] = p.get(name)
+            if isinstance(arrays[o], dict):  # an array field's shape
+                arrays[o] = _list_column(arrays[o])
         arrays["_source_file"] = pa.array([fpath] * n, pa.string())
         return _with_ops(pa.RecordBatch.from_arrays(
             [pa.nulls(n, f.type) if arrays[f.name] is None

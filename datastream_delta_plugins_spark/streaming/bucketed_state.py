@@ -233,8 +233,8 @@ class BucketedStateTable:
             return None
         paths = [os.path.join(self.path, d) for d in dirs]
         # mergeSchema: buckets written before a schema drift lack the
-        # new columns; merged read nulls them (mergeSchema semantics,
-        # same contract as CdcPipeline._evolve)
+        # new columns; merged read nulls them (the same contract as
+        # cdc.merge_batch, which reads a column a side lacks as NULL)
         return (self.spark.read.option("mergeSchema", "true")
                 .parquet(*paths))
 
@@ -568,11 +568,14 @@ class BucketedStateTable:
         from pyspark import StorageLevel
 
         from .retry import occ_retry
-        # respect a caller-held cache (CdcPipeline.apply_batch persists
-        # the batch for ITS lifetime): unpersisting here would silently
-        # drop the caller's cache — Spark unpersist is not
+        # cache the batch for this merge's actions (the touched-bucket
+        # collect, then the write, per attempt) unless the caller
+        # already caches this exact frame: unpersisting here would
+        # silently drop the caller's cache — Spark unpersist is not
         # reference-counted. Held across OCC retries: every attempt
-        # re-reads STATE, but the batch itself never changes.
+        # re-reads STATE, but the batch itself never changes. An
+        # Observation on `batch_df` (CdcPipeline.apply_batch's stats)
+        # fills on the first attempt's collect.
         own_persist = batch_df.storageLevel == StorageLevel.NONE
         if own_persist:
             batch_df.persist()
@@ -757,6 +760,16 @@ class BucketedStateTable:
         # only as far back as un-vacuumed exports (export docstring).
         delta_live, _mid, _nv = self._replay_delta_log()
         live.update(os.path.dirname(p) for p in delta_live)
+        # the live set holds only while CURRENT is still `cur`: a
+        # writer that advanced and pruned the window meanwhile makes it
+        # stale (its payloads vanish under our reads) — lost the race,
+        # do nothing this pass
+        try:
+            again = self.clog.read_committed()
+        except FileNotFoundError:
+            return []
+        if again is None or again[0] != cur:
+            return []
         removed: list[str] = []
         droot = os.path.join(self.path, "data").rstrip("/") + "/"
         seen: set[str] = set()

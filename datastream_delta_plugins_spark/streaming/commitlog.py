@@ -281,34 +281,46 @@ class PointerSwapLog(CommitLog):
 class VersionLog(CommitLog):
     """Object-store-safe commit: the payload PUT is the commit."""
 
-    def _valid(self, v: int) -> bool:
+    def _valid(self, v: int) -> dict | None:
         return self._valid_doc(os.path.join(self.log_dir, f"v{v}.json"), v)
 
     @staticmethod
-    def _valid_doc(path: str, v: int) -> bool:
+    def _valid_doc(path: str, v: int) -> dict | None:
+        """The payload at `path` if it is a complete commit of `v`."""
         try:
             with open(path) as f:
-                return json.load(f).get("version") == v
+                doc = json.load(f)
         except (OSError, json.JSONDecodeError):
-            return False
+            return None
+        return doc if doc.get("version") == v else None
+
+    def _committed(self) -> tuple[int, dict] | None:
+        # Highest VALID listed version, with the payload its validation
+        # read. A version file exists only because a commit PUT it
+        # (atomically), so any valid listed file IS committed; listing
+        # lag can only HIDE versions, never show uncommitted ones — so
+        # the worst failure mode is a stale (lower) read, never a torn
+        # or shadowed one. (An earlier contiguity rule could be fooled
+        # by a partially-failed prune into resurrecting an old version
+        # as current.) Torn local files (pre-link-protocol leftovers)
+        # fail _valid and are skipped.
+        for v in reversed(self._listed_versions()):
+            doc = self._valid(v)
+            if doc is not None:
+                return v, doc
+        return None
 
     def _raw_version(self) -> int:
-        # Highest VALID listed version. A version file exists only
-        # because a commit PUT it (atomically), so any valid listed
-        # file IS committed; listing lag can only HIDE versions, never
-        # show uncommitted ones — so the worst failure mode is a stale
-        # (lower) read, never a torn or shadowed one. (An earlier
-        # contiguity rule could be fooled by a partially-failed prune
-        # into resurrecting an old version as current.) Torn local
-        # files (pre-link-protocol leftovers) fail _valid and are
-        # skipped.
-        for v in reversed(self._listed_versions()):
-            if self._valid(v):
-                return v
-        return -1
+        rc = self._committed()
+        return -1 if rc is None else rc[0]
 
     def version(self) -> int:
         return self._check_legacy(self._raw_version())
+
+    def read_committed(self) -> tuple[int, dict] | None:
+        rc = self._committed()  # one read of the current payload
+        self._check_legacy(-1 if rc is None else rc[0])
+        return rc
 
     def _publish(self, v: int, payload: dict) -> None:
         doc = json.dumps({"version": v, **payload}, indent=1,
@@ -686,30 +698,43 @@ class ObjectStoreLog(CommitLog):
                 out.append(int(m.group(1)))
         return sorted(out)
 
-    def _valid(self, v: int) -> bool:
+    def _valid(self, v: int) -> dict | None:
         # a PUT object is complete by construction; validate the
         # version stamp anyway (same invariant VersionLog checks)
         try:
-            return self._payload(v).get("version") == v
+            doc = self._payload(v)
         except (FileNotFoundError, json.JSONDecodeError):
-            return False
+            return None
+        return doc if doc.get("version") == v else None
 
-    def _raw_version(self) -> int:
-        best = -1
+    def _committed(self) -> tuple[int, dict] | None:
+        """(highest valid version, the payload its validation GET
+        read): one LIST and one GET when the listing is current."""
+        best = None
         for v in reversed(self._listed_versions()):
-            if self._valid(v):
-                best = v
+            doc = self._valid(v)
+            if doc is not None:
+                best = (v, doc)
                 break
-        if self._floor > best and self._valid(self._floor):
+        if self._floor > (-1 if best is None else best[0]):
             # the floor's payload must still exist: another writer may
             # have advanced far past it AND pruned it while our listing
             # lags — returning it would crash read_committed instead of
             # degrading to the stale listed read the contract allows
-            return self._floor
+            doc = self._valid(self._floor)
+            if doc is not None:
+                return self._floor, doc
         return best
+
+    def _raw_version(self) -> int:
+        rc = self._committed()
+        return -1 if rc is None else rc[0]
 
     def version(self) -> int:
         return self._raw_version()  # no POSIX legacy layout to guard
+
+    def read_committed(self) -> tuple[int, dict] | None:
+        return self._committed()
 
     def _payload(self, v: int) -> dict:
         raw = self.client.get(self._key(v))

@@ -20,9 +20,10 @@ Replaces the reference's 30-second ScanTask executor loop
     committed version (`CdcPipeline.read_state`): the committing
     instance seeds it with the written schema, so no read of a
     committed version runs a parquet schema-inference job.
-  - schema drift (D3): each batch's payload fingerprint is compared to
-    the stored `{t}.schema.key`; new columns are added to the state
-    nullable (mergeSchema semantics), and the drift is recorded.
+  - schema drift (D3): a column only the batch carries joins the state
+    nullable (`cdc.merge_batch` reads it NULL where a side lacks it,
+    mergeSchema semantics), and each batch's payload fingerprint is
+    recorded in `{t}.schema.key`.
 """
 
 from __future__ import annotations
@@ -231,9 +232,15 @@ class CdcPipeline:
         self._state_handle = (dname, df)
         return df
 
-    def _write_state(self, df: DataFrame) -> str:
+    def _write_state(self, df: DataFrame, obs=None) -> str | None:
         """Write the next state version and commit it; returns the
         committed data dir's relative name.
+
+        With `obs` (the `Observation` of the batch `df` merges), an
+        empty batch commits nothing: the write filled `obs`, and on a
+        zero row count the data dir is deleted uncommitted and None
+        returned — the row count is only known once the batch has
+        been scanned, and the write is that scan.
 
         Data first, commit last: a crash in between leaves the
         previous committed version readable. The dir name is
@@ -250,6 +257,10 @@ class CdcPipeline:
         dname = attempt_unique_name("v", v)
         path = os.path.join(self.state_dir, dname)
         df.write.mode("overwrite").parquet(path)
+        if obs is not None and not obs.get["n"]:
+            for k in self.data_store.list_keys(path + "/"):
+                self.data_store.delete(k)
+            return None
         # n_rows from the just-written footers (driver-side pyarrow
         # metadata read, no Spark job): the auto backend's migration
         # trigger reads it from the payload instead of re-counting the
@@ -285,15 +296,6 @@ class CdcPipeline:
         allowed = set(cdc.payload_columns(df))  # once, not per column
         payload = [f"{c}:{t}" for c, t in df.dtypes if c in allowed]
         return json.dumps(sorted(payload))
-
-    def _evolve(self, state: DataFrame, batch: DataFrame) -> DataFrame:
-        """Add columns the batch introduced; drop nothing (mergeSchema)."""
-        missing = [f for f in batch.schema.fields
-                   if f.name not in state.columns
-                   and f.name in cdc.payload_columns(batch)]
-        for f in missing:
-            state = state.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return state
 
     # -- D2: catalog registration with PK in table properties --
 
@@ -363,6 +365,23 @@ class CdcPipeline:
 
     # -- the merge, usable directly in batch mode --
 
+    def _observe_stats(self, batch_df: DataFrame):
+        """(observed frame, Observation): the batch's bookkeeping stats
+        — row count, snapshot-row count, min source time, processed
+        files — ride the first action over the observed frame instead
+        of an aggregate with jobs of its own."""
+        from pyspark.sql import Observation
+        metrics = [F.count(F.lit(1)).alias("n")]
+        if "_is_snapshot" in batch_df.columns:
+            metrics.append(
+                F.sum(F.col("_is_snapshot").cast("int")).alias("snap_n"))
+        if "source_timestamp" in batch_df.columns:
+            metrics.append(F.min("source_timestamp").alias("min_ts"))
+        if self.ttl is not None and "_source_file" in batch_df.columns:
+            metrics.append(F.collect_set("_source_file").alias("files"))
+        obs = Observation()
+        return batch_df.observe(obs, *metrics), obs
+
     def apply_batch(self, batch_df: DataFrame, batch_id: int = -1,
                     streaming_barrier: bool = True) -> None:
         """Merge one micro-batch into the state table.
@@ -382,80 +401,66 @@ class CdcPipeline:
             batch_df = batch_df.drop(
                 *[c for c in cdc.payload_columns(batch_df)
                   if c not in keep])
-        # apply_batch runs >= 2 actions over the batch (bookkeeping agg,
-        # then the merge) and a foreachBatch DataFrame RE-READS its
-        # source files on every action — persist so each change file is
-        # scanned once per batch, not once per action (verified by the
-        # metrics listener test: numInputRows == file rows)
-        batch_df.persist()
-        try:
-            return self._apply_batch_inner(batch_df, batch_id,
-                                           streaming_barrier)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_batch_inner(self, batch_df: DataFrame, batch_id: int,
-                           streaming_barrier: bool) -> None:
-        # ONE bookkeeping aggregation per batch (row count, snapshot-row
-        # count, min source time, processed files) — this used to be
-        # 3-4 separate driver-side jobs (isEmpty + isEmpty + min +
-        # collect), measurable at a 30 s trigger with many tables
-        has_snap = "_is_snapshot" in batch_df.columns
-        has_ts = "source_timestamp" in batch_df.columns
-        want_files = self.ttl is not None and "_source_file" in batch_df.columns
-        stats = batch_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(F.col("_is_snapshot").cast("int")) if has_snap
-             else F.lit(0)).alias("snap_n"),
-            (F.min("source_timestamp") if has_ts
-             else F.lit(None)).alias("min_ts"),
-            (F.collect_set("_source_file") if want_files
-             else F.lit(None)).alias("files")).first()
-        if stats["n"] == 0:
-            # an empty scan still advances the completion check — the
-            # reference marks snapshot.done on a scan that found nothing
-            if streaming_barrier:
-                self._update_snapshot_barrier(0)
-                self.doc.save()
-            return
-        snap_n = int(stats["snap_n"] or 0)
-        src_time = stats["min_ts"]
-
+        # The merge scans the batch once, so nothing is persisted here:
+        # the stats are observed on that scan (versioned: the state
+        # write; bucketed: its touched-bucket collect, and
+        # BucketedStateTable.merge caches the batch for its own later
+        # actions). An empty batch is only known after that scan; the
+        # versioned path then drops the data it wrote, uncommitted.
+        # (Persisting the observed frame here broke that: on an empty
+        # batch its Observation.get raised an AssertionError.)
+        batch_df, obs = self._observe_stats(batch_df)
         fingerprint = self._schema_fingerprint(batch_df)
         if self.bstate is not None:
             # bucketed backend: merge + commit scoped to touched
             # buckets; drift is handled structurally (merge_batch
-            # unions by name, unchanged buckets null new columns via
-            # mergeSchema reads)
-            if self.bstate.version() < 0:
-                self.doc.put(state_keys.DB_CREATED, "true")  # D1 analog
+            # reads a column a side lacks as NULL, unchanged buckets
+            # null new columns via mergeSchema reads). No touched
+            # bucket (an empty batch) commits nothing.
+            fresh = self.bstate.version() < 0
             res = self.bstate.merge(batch_df)
-            if self.catalog_table:  # D2: O(touched) catalog update
-                self.bstate.sync_catalog(
-                    self.catalog_table, res["touched_buckets"],
-                    properties={"primaryKey": ",".join(self.pk_cols),
-                                "sourceTable": self.table})
-            if self.bucket_keep_versions is not None:
-                # with auto-vacuum every batch, at most keep+1 version
-                # dirs exist, so the listing walk is O(touched buckets)
-                self.bstate.vacuum(self.bucket_keep_versions)
+            stats = obs.get  # filled by merge's touched-bucket collect
+            if stats["n"]:
+                if fresh:
+                    self.doc.put(state_keys.DB_CREATED, "true")  # D1
+                if self.catalog_table:  # D2: O(touched) catalog update
+                    self.bstate.sync_catalog(
+                        self.catalog_table, res["touched_buckets"],
+                        properties={"primaryKey": ",".join(self.pk_cols),
+                                    "sourceTable": self.table})
+                if self.bucket_keep_versions is not None:
+                    # with auto-vacuum every batch, at most keep+1
+                    # version dirs exist, so the listing walk is
+                    # O(touched buckets)
+                    self.bstate.vacuum(self.bucket_keep_versions)
         else:
             state = self.read_state()
             if state is None:
                 merged = cdc.materialize(batch_df, self.pk_cols,
                                          self.sort_cols,
                                          keep_sort_keys=True)
-                self.doc.put(state_keys.DB_CREATED, "true")  # D1 analog
             else:
-                old_fp = self.doc.get(state_keys.k_schema_key(self.table))
-                if old_fp is not None and old_fp != fingerprint:
-                    state = self._evolve(state, batch_df)  # D3: ALTER
+                # D3 drift needs no ALTER: a column only one side
+                # carries reads NULL on the other
                 merged = cdc.merge_batch(state, batch_df, self.pk_cols,
                                          self.sort_cols)
-            dname = self._write_state(merged)
-            self._sync_catalog(os.path.join(self.state_dir, dname))
-            if self.state_backend == "auto":
-                self._maybe_migrate_to_bucketed()
+            dname = self._write_state(merged, obs)
+            stats = obs.get  # filled by that write
+            if dname is not None:
+                if state is None:
+                    self.doc.put(state_keys.DB_CREATED, "true")  # D1
+                self._sync_catalog(os.path.join(self.state_dir, dname))
+                if self.state_backend == "auto":
+                    self._maybe_migrate_to_bucketed()
+        if not stats["n"]:
+            # an empty scan still advances the completion check — the
+            # reference marks snapshot.done on a scan that found nothing
+            if streaming_barrier:
+                self._update_snapshot_barrier(0)
+                self.doc.save()
+            return
+        snap_n = int(stats.get("snap_n") or 0)
+        src_time = stats.get("min_ts")
 
         t = self.table
         self.doc.set(**{
@@ -474,7 +479,7 @@ class CdcPipeline:
         # purge (never deletes data whose merge didn't commit) — same
         # ordering as the reference's post-offset Custom-Time marking
         # (DatastreamEventReader.java:213-281).
-        if want_files and stats["files"]:
+        if stats.get("files"):
             self.ttl.mark_processed([f.removeprefix("file://")
                                      for f in stats["files"]])
 

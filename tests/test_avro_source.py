@@ -289,6 +289,52 @@ def test_payload_string_long_union_coerced(spark, tmp_path):
                   if r["K"] is not None) == ["42", "s42"]
 
 
+def _collection_fixture(tmp_path, ftype, values):
+    schema = _mk_envelope([("ID", ["null", "long"]), ("F", ["null", ftype])])
+    d = tmp_path / "src"
+    d.mkdir()
+    evs = [_mk_event({"ID": i, "F": v}) for i, v in enumerate(values)]
+    (d / "k1_cdc_0.avro").write_bytes(avro_ocf.write_ocf(schema, evs))
+    return str(d) + "/*"
+
+
+@pytest.mark.parametrize("decoder", ["auto", "scalar", "ckernel"])
+def test_array_payload_field_decodes(spark, tmp_path, decoder):
+    """An `array` payload field decodes on every tier (the C kernel
+    hands it over as offsets/validity/items, which become a list
+    column), null and empty arrays included."""
+    from datastream_delta_plugins_spark.sources import avro_ckernel
+    if decoder == "ckernel" and not avro_ckernel.available():
+        pytest.skip("no C compiler in this environment")
+    values = [[1, 2], None, [], [7]]
+    path = _collection_fixture(
+        tmp_path, {"type": "array", "items": "long"}, values)
+    df = avro_ocf.read_avro_changes(spark, path, decoder=decoder)
+    assert dict(df.dtypes)["F"] == "array<bigint>"
+    assert [r["F"] for r in df.orderBy("ID").collect()] == values
+
+
+@pytest.mark.parametrize("decoder", ["auto", "scalar", "ckernel"])
+def test_map_payload_field_decodes_or_names_the_type(spark, tmp_path,
+                                                     decoder):
+    """A `map` payload field decodes on the closure tree (and so under
+    "auto"); the C kernel, whose subset has no maps, raises its typed
+    `Unsupported` error naming the type."""
+    from datastream_delta_plugins_spark.sources import avro_ckernel
+    if decoder == "ckernel" and not avro_ckernel.available():
+        pytest.skip("no C compiler in this environment")
+    values = [{"a": 1, "b": 2}, None, {}]
+    path = _collection_fixture(
+        tmp_path, {"type": "map", "values": "long"}, values)
+    df = avro_ocf.read_avro_changes(spark, path, decoder=decoder)
+    if decoder == "ckernel":
+        with pytest.raises(Exception, match=r"Unsupported: map"):
+            df.collect()
+        return
+    assert dict(df.dtypes)["F"] == "map<string,bigint>"
+    assert [r["F"] for r in df.orderBy("ID").collect()] == values
+
+
 def test_plain_fixed_decodes_as_bytes():
     dec = avro_ocf._Decoder(b"abcd")
     assert avro_ocf.decode_value(

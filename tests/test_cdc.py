@@ -272,3 +272,88 @@ def test_keep_sort_keys_with_payload_sort_col(spark):
                                  "pk long, ver long, val string, _op string")
     merged = cdc.merge_batch(state, late, ["pk"], ["ver"]).first()
     assert merged["val"] == "b"  # late event must not win
+
+
+# -- merge_batch edge cases (each through the one-pass join) --
+
+MERGE_SCHEMA = "pk long, ver long, tag string, val string, _op string"
+
+
+def _merge(spark, state_rows, batch_rows, schema=MERGE_SCHEMA,
+           batch_schema=None, sort_cols=("ver", "tag")):
+    state = cdc.materialize(spark.createDataFrame(state_rows, schema),
+                            ["pk"], list(sort_cols), keep_sort_keys=True)
+    batch = spark.createDataFrame(batch_rows, batch_schema or schema)
+    return cdc.merge_batch(state, batch, ["pk"], list(sort_cols))
+
+
+def test_merge_equal_sort_keys_batch_wins(spark):
+    """Equal sort keys mean a replay of the same event: the batch side
+    wins the tie, DELETEs included."""
+    merged = _merge(spark,
+                    [(1, 5, "a", "state", "UPDATE"),
+                     (2, 5, "a", "state", "UPDATE")],
+                    [(1, 5, "a", "batch", "UPDATE"),
+                     (2, 5, "a", "batch", "DELETE")])
+    out = {r["pk"]: (r["val"], r["_is_deleted"]) for r in merged.collect()}
+    assert out == {1: ("batch", False), 2: ("batch", True)}
+
+
+def test_merge_null_sort_key_ranks_below_any_value(spark):
+    """A NULL sort-key field on either side ranks below every real
+    value (negative numbers and the empty string included) — the
+    join's comparison agrees with materialize's max_by ordering."""
+    merged = _merge(spark,
+                    [(1, None, "a", "state", "UPDATE"),
+                     (2, -5, "a", "state-wins", "UPDATE"),
+                     (3, 1, None, "state", "UPDATE"),
+                     (4, 1, "", "state-wins", "UPDATE")],
+                    [(1, -5, "a", "batch-wins", "UPDATE"),
+                     (2, None, "a", "batch", "UPDATE"),
+                     (3, 1, "", "batch-wins", "UPDATE"),
+                     (4, 1, None, "batch", "UPDATE")])
+    out = {r["pk"]: r["val"] for r in merged.collect()}
+    assert out == {1: "batch-wins", 2: "state-wins",
+                   3: "batch-wins", 4: "state-wins"}
+
+
+def test_merge_columns_only_one_side_carries(spark):
+    """A column only the state carries and one only the batch carries
+    both survive: state columns in order, then the batch's new one; the
+    side that lacks a column reads NULL for the rows it wins."""
+    merged = _merge(spark,
+                    [(1, 1, "old-a1", "INSERT"), (2, 1, "a2", "INSERT"),
+                     (4, 9, "a4", "INSERT")],
+                    [(1, 2, "b1", "UPDATE"), (3, 1, "b3", "INSERT"),
+                     (4, 2, "stale-b4", "UPDATE")],
+                    schema="pk long, ver long, a string, _op string",
+                    batch_schema="pk long, ver long, b string, _op string",
+                    sort_cols=("ver",))
+    assert merged.columns == ["pk", "ver", "a", "_is_deleted", "b"]
+    assert dict(merged.dtypes)["b"] == "string"
+    out = {r["pk"]: (r["ver"], r["a"], r["b"]) for r in merged.collect()}
+    assert out == {1: (2, None, "b1"), 2: (1, "a2", None),
+                   3: (1, None, "b3"), 4: (9, "a4", None)}
+
+
+def test_merge_pk_update_pair_straddling_state_and_batch(spark):
+    """A PK update (UPDATE-DELETE of the old key + UPDATE-INSERT of the
+    new) whose halves land in different batches merges to the same
+    state as one batch holding both, in either arrival order."""
+    def env(rows):
+        return normalize_ops(flatten_envelope(
+            spark.createDataFrame(rows, envelope_schema(EMP_SCHEMA))))
+
+    insert = _env("e1", "oracle-cdc-logminer", "INSERT",
+                  _payload(210, "12131.00"), (1000, 1, "AAA", 1))
+    old_half = _env("e4", "oracle-cdc-logminer", "UPDATE-DELETE",
+                    _payload(210, "12131.00"), (4000, 4, "AAD", 1))
+    new_half = _env("e5", "oracle-cdc-logminer", "UPDATE-INSERT",
+                    _payload(211, "12131.00"), (4000, 4, "AAD", 2))
+    for first, second in (([insert, old_half], [new_half]),
+                          ([insert, new_half], [old_half])):
+        state = cdc.materialize(env(first), ["EMPLOYEE_ID"],
+                                keep_sort_keys=True)
+        merged = cdc.merge_batch(state, env(second), ["EMPLOYEE_ID"])
+        out = {r["EMPLOYEE_ID"]: r["_is_deleted"] for r in merged.collect()}
+        assert out == {210: True, 211: False}

@@ -229,6 +229,39 @@ def test_versioned_pipeline_on_object_store_mock(spark, tmp_path):
     assert mk().read_state().count() == 20
 
 
+def test_read_committed_gets_the_payload_once():
+    """read_committed() returns the payload its validation read: one
+    LIST and one GET, for a reader whose listing is current and for
+    the writer itself."""
+    store = InMemoryObjectStore()
+    w = ObjectStoreLog("b/t", client=store)
+    w.commit({"doc": 1})
+    w.commit({"doc": 2})
+    for log in (w, ObjectStoreLog("b/t", client=store)):
+        store.requests.clear()
+        assert log.read_committed() == (1, {"version": 1, "doc": 2})
+        assert store.requests == [("list", "b/t/commitlog/"),
+                                  ("get", "b/t/commitlog/v1.json")]
+
+
+def test_warm_read_state_is_one_list_one_get(spark, tmp_path):
+    """A warm versioned read_state() on a bucket deployment costs one
+    LIST and one GET of the commit log, and no Spark job."""
+    from test_commitlog import _batch
+
+    from datastream_delta_plugins_spark.streaming.pipeline import CdcPipeline
+
+    store = InMemoryObjectStore()
+    p = CdcPipeline(spark, "t1", str(tmp_path / "src"), str(tmp_path / "w"),
+                    ["id"], sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
+                    state_backend="versioned", client=store)
+    p.apply_batch(_batch(spark), 0, streaming_barrier=False)
+    handle = p.read_state()
+    store.requests.clear()
+    assert p.read_state() is handle
+    assert [op for op, _ in store.requests] == ["list", "get"]
+
+
 def test_bucketed_state_on_object_store_mock(spark, tmp_path):
     from test_commitlog import _batch
 

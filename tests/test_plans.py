@@ -3,7 +3,7 @@ broadcast, codegen) — failures here mean a silent de-optimization."""
 
 from datastream_delta_plugins_spark.operators import cdc_queries, relational
 from datastream_delta_plugins_spark.plans import (
-    formatted_plan, has_broadcast_join, pushed_filters,
+    final_plan, formatted_plan, has_broadcast_join, pushed_filters,
     read_schema_columns, scan_count, wholestage_codegen_count)
 
 
@@ -44,6 +44,32 @@ def test_q26_single_scan_with_partial_agg(spark, sf_smoke):
     assert scan_count(df) == 1
     # max_by merge does partial aggregation before the pk shuffle
     assert "partial_max_by" in plan
+
+
+def test_merge_batch_one_state_scan_no_broadcast(spark, tmp_path):
+    """merge_batch is one pass: the state is scanned once and never
+    broadcast (a backfill batch can carry billions of PKs), and the
+    plan has at most 2 Exchanges (the batch aggregate's and the
+    state side of the join)."""
+    import re
+
+    from datastream_delta_plugins_spark.operators import cdc
+    events = "pk long, ver long, val string, _op string"
+    state_dir = str(tmp_path / "state")
+    cdc.materialize(
+        spark.createDataFrame([(i, 1, "s", "INSERT") for i in range(50)],
+                              events),
+        ["pk"], ["ver"], keep_sort_keys=True).write.parquet(state_dir)
+    batch = spark.createDataFrame([(3, 2, "b", "UPDATE"),
+                                   (99, 1, "n", "INSERT")], events)
+    df = cdc.merge_batch(spark.read.parquet(state_dir), batch, ["pk"],
+                         ["ver"])
+    plan = formatted_plan(df)
+    assert scan_count(df) == 1  # the batch is a local relation
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2
+    assert "BroadcastExchange" not in plan
+    assert "BroadcastExchange" not in final_plan(df)
+    assert df.count() == 51
 
 
 def test_q10_range_join_is_hash_join_with_residual(spark, sf_smoke):

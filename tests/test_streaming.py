@@ -934,7 +934,7 @@ def test_read_state_sees_another_instances_commit(spark, tmp_path):
 def test_seeded_handle_schema_equals_inferred(spark, tmp_path):
     """The handle a commit seeds carries the schema Spark infers for
     the committed dir: after the initial materialize, after a merge,
-    and after a drift batch that goes through ``_evolve``."""
+    and after a drift batch whose new column the state lacks."""
     src = str(tmp_path / "src")
     pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
                        pk_cols=["id"], state_backend="versioned")
@@ -963,3 +963,111 @@ def test_seeded_handle_schema_equals_inferred(spark, tmp_path):
     assert "extra" in seeded.columns
     got = {r["id"]: (r["val"], r["extra"]) for r in seeded.collect()}
     assert got == {1: ("a2", None), 2: ("b", 7)}
+
+
+# -- the one-pass merge and its observed bookkeeping stats --
+
+def test_warm_versioned_apply_batch_starts_at_most_four_jobs(spark,
+                                                            tmp_path):
+    """A warm versioned apply_batch is one write: the stats ride it as
+    an observation and the merge scans the state once (it was 10 jobs
+    with a separate stats aggregate and a two-scan merge)."""
+    src = str(tmp_path / "src")
+    pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], state_backend="versioned")
+    pipe.apply_batch(_batch(spark, *[("oracle-backfill", None, 0, i, "a")
+                                     for i in range(20)]),
+                     0, streaming_barrier=False)
+    pipe.read_state()
+    _, jobs = _jobs_started(spark, lambda: pipe.apply_batch(
+        _batch(spark, ("oracle-cdc-logminer", "UPDATE", 5, 1, "a2"),
+               ("oracle-cdc-logminer", "INSERT", 6, 99, "n")),
+        1, streaming_barrier=False))
+    assert jobs <= 4
+    assert _live(pipe.read_state())[:2] == [(0, "a"), (1, "a2")]
+    assert (99, "n") in _live(pipe.read_state())
+
+
+def test_merge_result_belongs_to_the_batch_session(spark, tmp_path):
+    """The merged frame must run in the BATCH's session: an Observation
+    on a foreachBatch frame never fills when the written frame belongs
+    to another session, and apply_batch would block forever. A batch
+    from a second session (as foreachBatch hands over) still applies."""
+    import threading
+
+    src = str(tmp_path / "src")
+    pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], state_backend="versioned")
+    pipe.apply_batch(_batch(spark, ("oracle-backfill", None, 0, 1, "a")),
+                     0, streaming_barrier=False)
+    other = spark.newSession()
+    batch = other.createDataFrame(
+        _rows(("oracle-cdc-logminer", "UPDATE", 5, 1, "a2")), CHANGE_SCHEMA)
+    merged = cdc.merge_batch(pipe.read_state(), cdc.normalize_ops(batch),
+                             ["id"])
+    assert merged.sparkSession is batch.sparkSession
+    assert merged._jdf.sparkSession().equals(batch._jdf.sparkSession())
+
+    t = threading.Thread(target=pipe.apply_batch, args=(batch, 1),
+                         kwargs={"streaming_barrier": False}, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "apply_batch blocked on its observation"
+    assert _live(pipe.read_state()) == [(1, "a2")]
+
+
+def test_ttl_marks_exactly_the_streamed_batch_files(spark, tmp_path):
+    """With ttl= set, the files a streamed batch read (observed on the
+    merge write) are marked processed, and only those: a second batch
+    onto the existing state adds exactly its own files."""
+    import glob
+
+    from datastream_delta_plugins_spark.sources.ttl import ProcessedFileTtl
+    src = str(tmp_path / "src")
+    ttl = ProcessedFileTtl(str(tmp_path / "ttl.json"))
+    pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], ttl=ttl, state_backend="versioned")
+
+    def parts(name):
+        return set(glob.glob(f"{src}/{name}/*.parquet"))
+
+    _write(spark, f"{src}/f1_oracle-backfill_0",
+           ("oracle-backfill", None, 0, 1, "a"))
+    _run(pipe)
+    first = set(ttl.doc.as_dict())
+    assert first == parts("f1_oracle-backfill_0")
+    _write(spark, f"{src}/f2_oracle-cdc-logminer_1",
+           ("oracle-cdc-logminer", "UPDATE", 5, 1, "a2"),
+           ("oracle-cdc-logminer", "INSERT", 6, 2, "b"))
+    _run(pipe)
+    assert set(ttl.doc.as_dict()) - first == \
+        parts("f2_oracle-cdc-logminer_1")
+    assert _live(pipe.read_state()) == [(1, "a2"), (2, "b")]
+
+
+@pytest.mark.parametrize("backend", ["versioned", "bucketed"])
+def test_empty_batch_commits_nothing_and_still_advances_barrier(
+        spark, tmp_path, backend):
+    """An empty batch is known only from the observed row count after
+    the merge's first scan: it commits no version, leaves no data dir
+    behind, and still advances the snapshot barrier like an empty
+    scan."""
+    src = str(tmp_path / "src")
+    pipe = CdcPipeline(spark, "t1", src + "/*", str(tmp_path / "work"),
+                       pk_cols=["id"], state_backend=backend)
+    pipe.apply_batch(_batch(spark, ("oracle-backfill", None, 0, 1, "a")),
+                     0, streaming_barrier=False)
+    version = (pipe.bstate or pipe.clog).version()
+
+    def files():
+        return sorted(os.path.relpath(os.path.join(r, n), pipe.state_dir)
+                      for r, _d, ns in os.walk(pipe.state_dir) for n in ns)
+
+    before = files()
+    pipe.mark_backfill("COMPLETED")
+    pipe.apply_batch(spark.createDataFrame([], CHANGE_SCHEMA), 1)
+    assert (pipe.bstate or pipe.clog).version() == version
+    assert files() == before
+    assert pipe.doc.get(sk.k_snapshot_done("t1")) == "true"
+    assert pipe.doc.get(sk.k_last_done("t1")) == "0"
+    assert _live(pipe.read_state()) == [(1, "a")]
