@@ -426,10 +426,10 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.8,
     # false-common rate << 1e-6 corpus-wide); n_sh keeps the
     # string-distinct denominator.
     #
-    # r12 shape: MELT each candidate pair into its two (pair, side,
-    # id) rows, attach the per-doc verify payload with ONE equi-join
-    # against a single (id, _hset, n_sh) projection, then fold the two
-    # sides back onto one row with a pair-keyed aggregate and compute
+    # MELT each candidate pair into its two (pair, side, id) rows,
+    # attach the per-doc verify payload with ONE equi-join against a
+    # single (id, _hset, n_sh) projection, then fold the two sides
+    # back onto one row with a pair-keyed aggregate and compute
     # Jaccard there.
     #
     # Why one join instead of the former two (cand ⋈ sig-as-i ⋈
@@ -440,23 +440,31 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.8,
     # rewrite of the two-join shape was built, parity-proven, and
     # measured a no-op before this — with AQE off, static
     # ReuseExchange already handled BOTH shapes). The melt shape reads
-    # and broadcasts the heavy hset payload ONCE; the extra pair-keyed
-    # exchange carries 2 rows per CANDIDATE pair — collision-bound,
-    # orders of magnitude below the corpus at any scale, and at 100 TB
-    # (where no hset side fits a broadcast) it halves the number of
-    # corpus-payload shuffle joins from two to one. Measured (sf0.1,
-    # fresh caches, interleaved pair-min under load): jobs 11→10,
-    # median 1.77→1.19 s, results exactly equal (collect compare).
+    # and broadcasts the heavy hset payload ONCE, and at 100 TB (where
+    # no hset side fits a broadcast) it halves the number of
+    # corpus-payload shuffle joins from two to one.
+    #
+    # The fold adds NO exchange: the candidate distinct hash-partitions
+    # on (i, j), the melt's two rows per pair stay in that partition,
+    # and the broadcast join streams the melt side and keeps its
+    # partitioning, so the pair-keyed aggregate reuses it. That holds
+    # only while i and j are PASS-THROUGH columns of the melt's
+    # Generate: read back out of the exploded struct ("e.*") they are
+    # new attributes, the planner loses the clustering and adds a
+    # fifth exchange (test_d03_shuffles_signatures_never_shingles pins
+    # four). Above the broadcast ceiling the verify becomes a shuffle
+    # join keyed on k and the fold gets its own exchange again — 2 rows
+    # per CANDIDATE pair, collision-bound and orders of magnitude below
+    # the corpus. Measured (sf0.1, fresh caches, interleaved): jobs
+    # 10→9, results exactly equal (collect compare).
     # Aggregates are deterministic: exactly one non-null row per
     # (pair, side), so first(ignorenulls)/max pick the unique value.
     v = sig.select(id_col, "_hset", "n_sh")
-    melt = (cand.select(F.explode(F.array(
-                F.struct(F.col("i"), F.col("j"),
-                         F.lit(0).alias("side"), F.col("i").alias("k")),
-                F.struct(F.col("i"), F.col("j"),
-                         F.lit(1).alias("side"), F.col("j").alias("k"))))
+    melt = (cand.select("i", "j", F.explode(F.array(
+                F.struct(F.lit(0).alias("side"), F.col("i").alias("k")),
+                F.struct(F.lit(1).alias("side"), F.col("j").alias("k"))))
                 .alias("e"))
-                .select("e.*"))
+                .select("i", "j", "e.side", "e.k"))
     joined = melt.join(v, melt["k"] == v[id_col])
     agg = (joined.groupBy("i", "j")
            .agg(F.max(F.when(F.col("side") == 0, F.col("n_sh")))
