@@ -54,8 +54,7 @@ _LEGACY_COMMITTED = "_committed_files.json"
 _LEGACY_ROLLUP = "_rollup_manifest.json"
 
 
-def _log_with_legacy(path: str, commit_impl: str, subdir: str,
-                     legacy_file: str):
+def _log_with_legacy(path: str, subdir: str, legacy_file: str):
     """Commit log with one-time adoption of the pre-seam single-file
     manifest. Adoption is best-effort race- and read-only-safe: a
     racing adopter losing the commit defers to the winner, a missing
@@ -64,7 +63,7 @@ def _log_with_legacy(path: str, commit_impl: str, subdir: str,
     then serve the legacy view via the fallback in the load helpers
     rather than crashing a pure read API."""
     from ..streaming.commitlog import ConcurrentWriterError
-    log = make_commit_log(path, commit_impl, subdir=subdir)
+    log = make_commit_log(path, subdir)
     lp = os.path.join(path, legacy_file)
     if os.path.exists(lp):
         try:
@@ -103,24 +102,22 @@ def _legacy_doc(path: str, legacy_file: str) -> dict | None:
             f"(adoption skipped it for the same reason)") from e
 
 
-def load_committed(source_path: str, commit_impl: str = "pointer") -> dict | None:
-    rc = _log_with_legacy(source_path, commit_impl, COMMITTED_LOG,
+def load_committed(source_path: str) -> dict | None:
+    rc = _log_with_legacy(source_path, COMMITTED_LOG,
                           _LEGACY_COMMITTED).read_committed()
     if rc is None:
         return _legacy_doc(source_path, _LEGACY_COMMITTED)
     return rc[1]["doc"]
 
 
-def store_committed(source_path: str, committed: dict,
-                    commit_impl: str = "pointer") -> None:
+def store_committed(source_path: str, committed: dict) -> None:
     os.makedirs(source_path, exist_ok=True)
-    _log_with_legacy(source_path, commit_impl, COMMITTED_LOG,
+    _log_with_legacy(source_path, COMMITTED_LOG,
                      _LEGACY_COMMITTED).commit({"doc": committed})
 
 
-def _signatures(spark: SparkSession, source_path: str,
-                commit_impl: str = "pointer") -> dict[str, list]:
-    committed = load_committed(source_path, commit_impl)
+def _signatures(spark: SparkSession, source_path: str) -> dict[str, list]:
+    committed = load_committed(source_path)
     if committed is not None:
         # files are immutable once committed: (count, bytes) per
         # partition is a complete signature, no mtime needed
@@ -137,25 +134,23 @@ def _partition_keys(d: str) -> list[str]:
     return [seg.split("=", 1)[0] for seg in d.split("/") if "=" in seg]
 
 
-def _load_manifest(rollup_path: str, commit_impl: str = "pointer") -> dict:
-    rc = _log_with_legacy(rollup_path, commit_impl, ROLLUP_LOG,
+def _load_manifest(rollup_path: str) -> dict:
+    rc = _log_with_legacy(rollup_path, ROLLUP_LOG,
                           _LEGACY_ROLLUP).read_committed()
     if rc is None:
         return _legacy_doc(rollup_path, _LEGACY_ROLLUP) or {}
     return rc[1]["doc"]
 
 
-def _store_manifest(rollup_path: str, sigs: dict,
-                    commit_impl: str = "pointer") -> None:
+def _store_manifest(rollup_path: str, sigs: dict) -> None:
     os.makedirs(rollup_path, exist_ok=True)
-    _log_with_legacy(rollup_path, commit_impl, ROLLUP_LOG,
+    _log_with_legacy(rollup_path, ROLLUP_LOG,
                      _LEGACY_ROLLUP).commit({"doc": sigs})
 
 
 def update_rollup(spark: SparkSession, source_path: str, rollup_path: str,
                   group_cols: list[str],
-                  aggs: Mapping[str, Column],
-                  commit_impl: str = "pointer") -> dict:
+                  aggs: Mapping[str, Column]) -> dict:
     """Bring the rollup at `rollup_path` up to date with the
     time-partitioned table at `source_path`.
 
@@ -172,18 +167,17 @@ def update_rollup(spark: SparkSession, source_path: str, rollup_path: str,
     """
     from ..streaming.retry import occ_retry
     return occ_retry(lambda: _update_rollup_attempt(
-        spark, source_path, rollup_path, group_cols, aggs, commit_impl))
+        spark, source_path, rollup_path, group_cols, aggs))
 
 
 def _update_rollup_attempt(spark, source_path, rollup_path, group_cols,
-                           aggs, commit_impl) -> dict:
-    sigs = _signatures(spark, source_path, commit_impl)
+                           aggs) -> dict:
+    sigs = _signatures(spark, source_path)
     # ONE read of the rollup log: the manifest the plan diffs against
     # and the version the commit lands at come from the same snapshot,
     # so a concurrent rollup writer conflicts (occ_retry re-plans)
     # instead of this attempt landing later over its manifest
-    log = _log_with_legacy(rollup_path, commit_impl, ROLLUP_LOG,
-                           _LEGACY_ROLLUP)
+    log = _log_with_legacy(rollup_path, ROLLUP_LOG, _LEGACY_ROLLUP)
     rc = log.read_committed()
     if rc is None:
         seen = _legacy_doc(rollup_path, _LEGACY_ROLLUP) or {}
@@ -199,7 +193,7 @@ def _update_rollup_attempt(spark, source_path, rollup_path, group_cols,
     data_path = os.path.join(rollup_path, "data")
     if changed:
         part_cols = _partition_keys(next(iter(sigs)))
-        committed = load_committed(source_path, commit_impl)
+        committed = load_committed(source_path)
         if committed is not None:
             # read exactly the committed files of the changed
             # partitions — orphans from crashed appends are invisible
@@ -228,14 +222,13 @@ def _update_rollup_attempt(spark, source_path, rollup_path, group_cols,
             "total": len(sigs)}
 
 
-def read_rollup(spark: SparkSession, rollup_path: str,
-                commit_impl: str = "pointer") -> DataFrame:
+def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """Read the current rollup: the data files filtered to the
     manifest's live partitions (the isin predicate is on partition
     columns, so it prunes directories as well as hiding rows whose
     source partition vanished)."""
     df = spark.read.parquet(os.path.join(rollup_path, "data"))
-    live = sorted(_load_manifest(rollup_path, commit_impl))
+    live = sorted(_load_manifest(rollup_path))
     keys = ["/".join(seg for seg in d.split("/") if "=" in seg)
             for d in live]
     if not keys:  # every source partition vanished: nothing is live
@@ -247,12 +240,11 @@ def read_rollup(spark: SparkSession, rollup_path: str,
     return df.where(key_expr.isin(keys))
 
 
-def read_committed(spark: SparkSession, source_path: str,
-                   commit_impl: str = "pointer") -> DataFrame:
+def read_committed(spark: SparkSession, source_path: str) -> DataFrame:
     """Read a landing table written by the streaming sink: exactly the
     committed files (orphans from crashed appends excluded), with the
     partition columns preserved via basePath."""
-    committed = load_committed(source_path, commit_impl)
+    committed = load_committed(source_path)
     if committed is None:
         return spark.read.parquet(source_path)
     paths = [p for files in committed["files"].values()
@@ -263,7 +255,6 @@ def read_committed(spark: SparkSession, source_path: str,
 
 
 def vacuum_landing(spark: SparkSession, source_path: str,
-                   commit_impl: str = "pointer",
                    data_store=None) -> list[str]:
     """Delete files under a committed-manifest landing table that the
     manifest does not list — the orphans a crash between append and
@@ -274,7 +265,7 @@ def vacuum_landing(spark: SparkSession, source_path: str,
     client and the reclaim is request-based."""
     from ..streaming.commitlog import PosixStore
     data_store = data_store or PosixStore()
-    committed = load_committed(source_path, commit_impl)
+    committed = load_committed(source_path)
     if committed is None:
         return []
     live = {p for files in committed["files"].values() for p, _ in files}

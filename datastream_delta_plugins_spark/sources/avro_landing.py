@@ -90,14 +90,11 @@ class AvroLandingConverter:
 
     def __init__(self, spark, avro_dir: str, landing_dir: str,
                  avro_schema=None, columns=None,
-                 commit_impl: str = "pointer",
                  retention_days: float | None = 30.0,
                  path_layout: str = "flat",
                  source_store=None, data_store=None,
                  occ_retries: int = 5, client=None):
-        from ..streaming.commitlog import (ObjectStoreLog, PosixStore,
-                                           make_commit_log,
-                                           sidecar_store_for)
+        from ..streaming.commitlog import PosixStore, make_commit_log
         if path_layout not in ("flat", "datestream"):
             raise ValueError(f"unknown path_layout {path_layout!r}")
         self.spark = spark
@@ -110,21 +107,16 @@ class AvroLandingConverter:
         self.path_layout = path_layout
         self.occ_retries = occ_retries
         self.seg_dir = os.path.join(landing_dir, LOG_SUBDIR, SEG_SUBDIR)
-        if client is not None:
-            # config-only bucket deployment: a real ObjectStoreClient
-            # (e.g. objectstores.GcsClient/S3Client) carries the whole
-            # sidecar plane; commit_impl is ignored
-            self.clog = ObjectStoreLog(landing_dir, subdir=LOG_SUBDIR,
-                                       client=client)
-        else:
-            self.clog = make_commit_log(landing_dir, commit_impl,
-                                        subdir=LOG_SUBDIR)
+        # client: config-only bucket deployment — a real
+        # ObjectStoreClient (e.g. objectstores.GcsClient/S3Client)
+        # carries the whole sidecar plane, manifest log included
+        self.clog = make_commit_log(landing_dir, LOG_SUBDIR, client=client)
         # every sidecar request rides the client interface so the
         # whole landing protocol (segments, listings, vacuum) can run
         # against real object-store request semantics; bytes Spark /
         # the decoder read and write (parquet, avro blobs) stay on the
         # engine's filesystem connectors as in any Spark deployment
-        self.store = sidecar_store_for(self.clog)   # segments + log GC
+        self.store = client if client is not None else PosixStore()
         self.source_store = source_store or PosixStore()  # blob listing
         self.data_store = data_store or PosixStore()      # batch-dir GC
         # segment files are immutable once referenced by a commit and

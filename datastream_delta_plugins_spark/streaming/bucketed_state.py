@@ -6,7 +6,7 @@ table every micro-batch — correct, but at 100 TB a 30 s trigger
 cannot rewrite 100 TB. The industry answer is a table format whose
 commit is a metadata swap over immutable files (Delta/Iceberg MERGE).
 This module is that shape in ~150 lines, built only on parquet + an
-atomic pointer:
+atomic conditional commit:
 
   - rows are hash-assigned to `n_buckets` PK buckets
     (pmod(xxhash64(pk), n)) — the same bucket function every commit,
@@ -17,10 +17,10 @@ atomic pointer:
     and publishes a manifest mapping every bucket to its CURRENT
     directory — untouched buckets keep pointing at files written by
     earlier commits, byte-identical, never copied;
-  - the manifest pointer swap (`os.replace`) is the commit: readers
-    see the old complete version or the new complete version, never a
-    mix. A crash mid-commit leaves orphan data dirs that `vacuum()`
-    collects — a broken table is impossible.
+  - the conditional PUT of the manifest version (streaming/commitlog.py)
+    is the commit: readers see the old complete version or the new
+    complete version, never a mix. A crash mid-commit leaves orphan
+    data dirs that `vacuum()` collects — a broken table is impossible.
 
 Per-batch cost is therefore O(touched buckets + batch), not O(state):
 with 4096 buckets and a batch touching 1% of keys, ~41 bucket merges
@@ -45,9 +45,8 @@ from pyspark.sql import functions as F
 
 from ..envelope import SORT_KEY_COLS
 from ..operators import cdc
-from .commitlog import (ObjectStoreLog, PosixStore, attempt_name_re,
-                        attempt_unique_name, legacy_root_version,
-                        make_commit_log)
+from .commitlog import (PosixStore, attempt_name_re, attempt_unique_name,
+                        legacy_root_version, make_commit_log)
 
 _BUCKET = "_state_bucket"
 
@@ -107,19 +106,18 @@ _VDIR = attempt_name_re("v")
 class BucketedStateTable:
     """Bucketed CDC state table at `path`.
 
-    The manifest swap goes through the commit-protocol seam
-    (streaming/commitlog.py): ``commit_impl="pointer"`` is the POSIX
-    pointer swap, ``"log"`` the object-store-safe version log.
-    Concurrent writers (maintenance racing ingest) are safe on the
-    conditional-PUT impls: commits that lose the race re-plan with a
-    bounded OCC retry, and every data dir is attempt-uniquely named
-    so in-flight writers never clobber each other."""
+    Each manifest version is committed by the conditional PUT of the
+    commit log (streaming/commitlog.py) under ``manifest/``, on
+    ``client`` when one is given, else on local disk. Concurrent
+    writers (maintenance racing ingest, two merges) are safe on both:
+    a commit that loses the race re-plans with a bounded OCC retry,
+    and every data dir is attempt-uniquely named so in-flight writers
+    never clobber each other."""
 
     def __init__(self, spark: SparkSession, path: str,
                  pk_cols: Sequence[str],
                  sort_cols: Sequence[str] = SORT_KEY_COLS,
                  n_buckets: int = 16,
-                 commit_impl: str = "pointer",
                  keep_versions: int | None = 1,
                  data_store=None, occ_retries: int = 5, client=None):
         self.spark = spark
@@ -133,14 +131,10 @@ class BucketedStateTable:
         # entirely; otherwise retain max(8, keep+1) so every version a
         # reader may diff against still has its manifest json
         keep = None if keep_versions is None else max(8, keep_versions + 1)
-        if client is not None:
-            # config-only bucket deployment (objectstores.GcsClient /
-            # S3Client); commit_impl is ignored
-            self.clog = ObjectStoreLog(path, subdir="manifest",
-                                       keep=keep, client=client)
-        else:
-            self.clog = make_commit_log(path, commit_impl,
-                                        subdir="manifest", keep=keep)
+        # client: config-only bucket deployment (objectstores.GcsClient
+        # / S3Client)
+        self.clog = make_commit_log(path, "manifest", keep=keep,
+                                    client=client)
         # data-plane maintenance (seed/merge dir discovery, vacuum)
         # rides the client interface; Spark reads/writes the parquet
         # bytes through its own connectors as in any deployment
@@ -148,9 +142,11 @@ class BucketedStateTable:
         self.occ_retries = occ_retries
         # read handle: (sorted committed bucket dirs, DataFrame over them)
         self._read_handle: tuple[tuple[str, ...], DataFrame] | None = None
-        if not isinstance(self.clog, ObjectStoreLog):
+        if client is None:
+            # manifest/ marks the bucketed layout for the cross-backend
+            # guards from the first open on
             os.makedirs(os.path.join(path, "manifest"), exist_ok=True)
-        self._adopt_legacy_layout()
+            self._adopt_legacy_layout()
 
     def _adopt_legacy_layout(self) -> None:
         """Migrate a pre-seam layout (root-level CURRENT pointer next
@@ -703,7 +699,7 @@ class BucketedStateTable:
         log, data through ``data_store`` — for the single-writer
         wipe-and-rebuild path (the auto backend's migration retry
         re-seeding over a half-migrated table). The manifest reset
-        works on any log impl (a POSIX rmtree cannot reset a
+        works on any store (a POSIX rmtree cannot reset a
         bucket-resident manifest; ``clog.reset()`` can). Data removal
         is as complete as ``data_store``'s view of ``path``: the
         default PosixStore covers local/mounted data dirs (every test

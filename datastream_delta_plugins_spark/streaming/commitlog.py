@@ -1,50 +1,55 @@
-"""Commit protocol seam for every manifest the engine maintains.
+"""Commit protocol for every manifest the engine maintains.
 
 The versioned state table, the bucketed state manifest, the rollup
-manifest, and the Avro landing manifest all need the same primitive:
+manifests and the Avro landing manifest all need the same primitive:
 "publish a new JSON payload as the committed version, atomically, so a
 crash between data files and the commit leaves the previous version
-readable". Historically each site did its own ``os.replace`` pointer
-swap — correct for a single writer on a POSIX filesystem, undefined on
-GCS/S3 where rename is copy+delete and listings lag writes.
+readable, and a second writer of the same version loses loudly".
 
-This module makes the protocol explicit and pluggable:
+There is one protocol, ``ObjectStoreLog``: a commit IS the conditional
+PUT (create-if-absent) of ``<path>/<subdir>/v{N}.json``. No pointer,
+no rename:
 
-``PointerSwapLog`` (default)
-    today's behavior: payload written to ``<dir>/<sub>/v{N}.json``,
-    then a one-line ``CURRENT`` pointer swapped in with ``os.replace``.
-    Single-writer POSIX semantics.
+- reader rule: the committed version is the highest VALID listed
+  ``v{N}.json`` (parses, stamped ``"version": N``). A version file
+  exists only because a commit put it, so listing lag can only hide
+  versions (a stale read that converges), never surface an
+  uncommitted one;
+- publish: ``put_if_absent`` of the complete payload plus a
+  ``_writer`` nonce; of two writers of one version exactly one wins,
+  and the loser raises ``ConcurrentWriterError`` (``commit_at`` is the
+  OCC primitive every call site plans against).
 
-``VersionLog`` (object-store shape)
-    no pointer and no rename: a commit IS the (atomic, conditional)
-    PUT of ``v{N}.json``, so any valid listed version file is by
-    construction committed; the reader takes the highest valid listed
-    version. Listing lag can only hide versions (a stale read that
-    converges), never surface an uncommitted one. Payload files are
-    immutable once committed. Concurrent writers are detected by
-    create-exclusive: the payload is fully written to a temp file
-    FIRST and published with ``os.link`` (an atomic
-    create-exclusive that carries the complete content — the local
-    stand-in for a conditional PUT / if-generation-match write), so a
-    listed version file is either absent or a complete committed
-    payload; there is no window in which a LIVE writer's claim looks
-    like a crashed leftover.
+The store is chosen only by whether a ``client`` is given
+(``make_commit_log``): an ``ObjectStoreClient`` (GCS/S3 binding, or
+the ``InMemoryObjectStore`` mock) for bucket deployments, else
+``VersionLog`` — the same log over the local ``PosixStore``, where
+``put_if_absent`` is a temp file published with ``os.link``. The local
+log adds only what a filesystem can hold and a bucket cannot: the
+root-level ``CURRENT`` guard with ``adopt_legacy`` (below), and the
+rename-aside reclamation of a torn ``v{N}.json`` left by a writer that
+died mid-write before the link protocol existed.
 
-Both speak ``read_committed() -> (version, payload) | None`` and
-``commit(payload) -> version``. On a real deployment the VersionLog
-maps 1:1 onto GCS generation-match / S3 If-None-Match conditional
-writes, or is replaced outright by a Delta/Iceberg commit when those
-bindings exist (SURVEY §2.4 D-group). Data-file layout is unchanged:
-writers still write parquet under version-named directories FIRST and
-commit LAST, so readers never observe data without its manifest.
+Data-file layout is the same for every store: writers write parquet
+under attempt-unique, version-named directories FIRST and commit LAST,
+so readers never observe data without its manifest.
 
-Legacy layout: before this seam existed, call sites swapped a
-``CURRENT`` pointer at the dataset ROOT (not under the log subdir).
-An un-migrated directory must not read as "no commits yet" — the next
-batch would silently reset the table over live data — so
-``version()`` refuses to treat a root-level pointer as empty, and
-``adopt_legacy()`` migrates it into the log (call sites know the
-payload shape their old layout implied).
+Layouts written before this protocol:
+
+- The pointer-swap layout kept a ``CURRENT`` file INSIDE the log
+  subdir next to ``{"version": N, ...}`` payloads without ``_writer``.
+  Those payloads pass the listing rule, and the in-log ``CURRENT`` is
+  never listed, so such a dir opens at its pointer's version with no
+  migration. A complete payload above the old pointer reads as
+  committed — safe, because every site writes its data before its
+  payload. A torn payload is skipped by reads and reclaimed by the next
+  commit of that version.
+- Before the log subdirs existed, call sites swapped a ``CURRENT``
+  pointer at the dataset ROOT. An un-migrated dir must not read as "no
+  commits yet" (the next batch would reset the table over live data),
+  so the local log refuses to read a root pointer as empty, and
+  ``adopt_legacy()`` migrates it (call sites know the payload shape
+  their old layout implied).
 """
 
 from __future__ import annotations
@@ -77,8 +82,7 @@ def attempt_name_re(stem: str) -> re.Pattern:
     pre-seam names included); group(1) is the version stamp."""
     return re.compile(rf"^{re.escape(stem)}(\d+)(?:-[0-9a-f]+)?$")
 
-#: pre-seam root-level pointer name (same string the in-log pointer
-#: uses, but at the dataset root instead of the log subdir)
+#: pre-seam root-level pointer name
 LEGACY_POINTER = "CURRENT"
 
 
@@ -93,300 +97,6 @@ def legacy_root_version(path: str) -> int | None:
 
 class ConcurrentWriterError(RuntimeError):
     """Another writer committed this version first (split-brain guard)."""
-
-
-class CommitLog:
-    """Versioned JSON payload log rooted at ``<path>/<subdir>``.
-
-    ``keep`` bounds how many committed payload files are retained
-    (current + ``keep`` older); ``None`` disables pruning entirely for
-    deployments that need an unbounded history horizon (e.g. a long
-    ``changes_between()`` window with user-scheduled vacuum). Note
-    payload pruning happens ONLY through ``keep`` (the vacuums GC
-    data files, never ``v{N}.json`` payloads), so ``keep=None`` grows
-    the payload set O(commits) forever — and on the listing-based
-    impls (VersionLog/ObjectStoreLog; the pointer impl reads a single
-    pointer) every ``version()`` LIST scans it: ~86k keys/month at a
-    30 s cadence. Bound ``keep`` to the horizon actually needed
-    instead of running keep=None indefinitely.
-    """
-
-    def __init__(self, path: str, subdir: str = "commitlog",
-                 keep: int | None = 8):
-        self.path = path
-        self.log_dir = os.path.join(path, subdir)
-        self.keep = keep
-
-    # -- interface --
-
-    def version(self) -> int:
-        """Highest committed version, -1 before the first commit."""
-        raise NotImplementedError
-
-    def read_committed(self) -> tuple[int, dict] | None:
-        v = self.version()
-        if v < 0:
-            return None
-        return v, self._payload(v)
-
-    def commit(self, payload: dict) -> int:
-        return self.commit_at(self.version() + 1, payload)
-
-    def commit_at(self, v: int, payload: dict) -> int:
-        """Commit exactly version ``v`` — the OCC primitive: a caller
-        that planned against version ``v-1`` commits AT ``v``, so a
-        concurrent writer taking ``v`` first surfaces as
-        ConcurrentWriterError (on the conditional-PUT impls) instead
-        of the stale plan silently landing on a later version and
-        erasing the other writer's manifest changes (lost update).
-        ``commit()`` is ``commit_at(version()+1, ...)`` — fine for
-        payloads not derived from a prior read."""
-        self._check_payload(payload)
-        self._ensure_log_dir()
-        self._publish(v, payload)
-        if self.keep is not None:
-            self._prune(v - self.keep)
-        return v
-
-    def _ensure_log_dir(self) -> None:
-        os.makedirs(self.log_dir, exist_ok=True)  # object stores: no-op
-
-    @staticmethod
-    def _check_payload(payload: dict) -> None:
-        bad = RESERVED_PAYLOAD_KEYS & set(payload)
-        if bad:
-            raise ValueError(
-                f"payload carries log-reserved key(s) {sorted(bad)} — "
-                f"the commit log stamps these itself; nest caller "
-                f"metadata under its own key")
-
-    def _publish(self, v: int, payload: dict) -> None:
-        raise NotImplementedError
-
-    # -- legacy (pre-seam) layout --
-
-    def _check_legacy(self, v: int) -> int:
-        """Refuse to read an un-migrated pre-seam directory as empty.
-
-        A root-level ``CURRENT`` with nothing committed in the log
-        means the directory was written before the commit seam
-        existed; returning -1 would let the next commit silently reset
-        the table over the live data that pointer still references.
-        """
-        if v < 0 and legacy_root_version(self.path) is not None:
-            raise RuntimeError(
-                f"{self.path} has a root-level {LEGACY_POINTER} pointer "
-                f"from the pre-commit-seam layout but no commits under "
-                f"{self.log_dir} — migrate it with adopt_legacy() "
-                f"before reading or writing this log")
-        return v
-
-    def adopt_legacy(self, payload: dict) -> int | None:
-        """Migrate a pre-seam root-level pointer into this log.
-
-        Re-publishes the pointed version through this log with
-        ``payload`` (the call site knows what the old layout implied),
-        then removes the root pointer. Idempotent and crash-safe: the
-        pointer is removed LAST, and a re-run that finds the log
-        already at >= the pointed version only clears the leftover
-        pointer. Returns the adopted version, or None if there was no
-        legacy pointer.
-        """
-        lv = legacy_root_version(self.path)
-        if lv is None:
-            return None
-        if self._raw_version() < lv:
-            self._check_payload(payload)
-            self._ensure_log_dir()
-            self._publish(lv, payload)
-        os.remove(os.path.join(self.path, LEGACY_POINTER))
-        return lv
-
-    def _raw_version(self) -> int:
-        """version() without the legacy-pointer guard (adoption runs
-        while the pointer still exists)."""
-        raise NotImplementedError
-
-    # -- shared plumbing --
-
-    def _payload(self, v: int) -> dict:
-        with open(os.path.join(self.log_dir, f"v{v}.json")) as f:
-            return json.load(f)
-
-    def _listed_versions(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(int(m.group(1)) for n in os.listdir(self.log_dir)
-                      if (m := _VFILE.match(n)))
-
-    def _prune(self, keep_from: int) -> None:
-        """Drop payload files older than ``keep_from`` (data-dir GC is
-        the caller's job — it knows which files a stale reader may
-        still hold open)."""
-        for v in self._listed_versions():
-            if v < keep_from:
-                try:
-                    os.remove(os.path.join(self.log_dir, f"v{v}.json"))
-                except OSError:
-                    pass
-
-    def reset(self) -> None:
-        """Erase every commit: the log reads as never-written. For the
-        single-writer wipe-and-rebuild path (e.g. re-seeding a
-        half-migrated table); data-file GC is the caller's job. Under
-        a lagging listing a just-committed version can survive one
-        reset and surface later — callers retry (the next commit
-        conflicts loudly rather than corrupting)."""
-        self._prune(float("inf"))
-
-
-class PointerSwapLog(CommitLog):
-    """POSIX single-writer commit: payload file + os.replace pointer.
-
-    The pointer lives INSIDE the (underscore-ignorable) log subdir so a
-    commit log can sit in a directory Spark also reads as a dataset
-    root without the pointer being mistaken for a data file."""
-
-    POINTER = "CURRENT"
-
-    def _raw_version(self) -> int:
-        ptr = os.path.join(self.log_dir, self.POINTER)
-        if not os.path.exists(ptr):
-            return -1
-        with open(ptr) as f:
-            return int(f.read().strip())
-
-    def version(self) -> int:
-        return self._check_legacy(self._raw_version())
-
-    def _publish(self, v: int, payload: dict) -> None:
-        with open(os.path.join(self.log_dir, f"v{v}.json"), "w") as f:
-            json.dump({"version": v, **payload}, f, indent=1,
-                      sort_keys=True)
-        fd, tmp = tempfile.mkstemp(dir=self.log_dir, prefix=".commit")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(self.log_dir, self.POINTER))
-
-    def reset(self) -> None:
-        # pointer FIRST: a crash mid-reset must not leave a pointer at
-        # a deleted payload
-        try:
-            os.remove(os.path.join(self.log_dir, self.POINTER))
-        except OSError:
-            pass
-        super().reset()
-
-
-class VersionLog(CommitLog):
-    """Object-store-safe commit: the payload PUT is the commit."""
-
-    def _valid(self, v: int) -> dict | None:
-        return self._valid_doc(os.path.join(self.log_dir, f"v{v}.json"), v)
-
-    @staticmethod
-    def _valid_doc(path: str, v: int) -> dict | None:
-        """The payload at `path` if it is a complete commit of `v`."""
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
-        return doc if doc.get("version") == v else None
-
-    def _committed(self) -> tuple[int, dict] | None:
-        # Highest VALID listed version, with the payload its validation
-        # read. A version file exists only because a commit PUT it
-        # (atomically), so any valid listed file IS committed; listing
-        # lag can only HIDE versions, never show uncommitted ones — so
-        # the worst failure mode is a stale (lower) read, never a torn
-        # or shadowed one. (An earlier contiguity rule could be fooled
-        # by a partially-failed prune into resurrecting an old version
-        # as current.) Torn local files (pre-link-protocol leftovers)
-        # fail _valid and are skipped.
-        for v in reversed(self._listed_versions()):
-            doc = self._valid(v)
-            if doc is not None:
-                return v, doc
-        return None
-
-    def _raw_version(self) -> int:
-        rc = self._committed()
-        return -1 if rc is None else rc[0]
-
-    def version(self) -> int:
-        return self._check_legacy(self._raw_version())
-
-    def read_committed(self) -> tuple[int, dict] | None:
-        rc = self._committed()  # one read of the current payload
-        self._check_legacy(-1 if rc is None else rc[0])
-        return rc
-
-    def _publish(self, v: int, payload: dict) -> None:
-        doc = json.dumps({"version": v, **payload}, indent=1,
-                         sort_keys=True)
-        target = os.path.join(self.log_dir, f"v{v}.json")
-        # local stand-in for a conditional PUT: the payload is COMPLETE
-        # in a temp file before os.link atomically publishes it as the
-        # create-exclusive claim — a listed version file is therefore
-        # either absent or a complete committed payload, so a racer
-        # hitting FileExistsError knows the other writer's commit is
-        # real (no window where a live writer's claim reads as a
-        # crashed leftover). A real object store needs neither step —
-        # its PUT is atomic and if-not-exists is a request header.
-        fd, tmp = tempfile.mkstemp(dir=self.log_dir, prefix=".put")
-        try:
-            with os.fdopen(fd, "w") as f:
-                f.write(doc)
-            try:
-                os.link(tmp, target)
-            except FileExistsError:
-                if self._valid(v):
-                    raise ConcurrentWriterError(
-                        f"version {v} at {self.log_dir} was committed "
-                        f"by another writer") from None
-                # invalid target: a torn pre-link-protocol leftover
-                # (with the link protocol a published file is complete
-                # by construction, so no LIVE writer can own it).
-                # Reclaim EXCLUSIVELY by renaming it aside to a
-                # writer-unique name: of two racers, exactly one
-                # rename succeeds — a blind remove here would let the
-                # loser delete the winner's just-published commit
-                # (remove-then-link TOCTOU).
-                try:
-                    os.rename(target, tmp + ".reclaimed")
-                except FileNotFoundError:
-                    pass  # another racer took it aside already
-                else:
-                    # Between our _valid check and the rename a racer
-                    # may have reclaimed the leftover and published a
-                    # VALID commit at target (a fresh inode — rename is
-                    # not conditional), so what we just moved aside
-                    # could be a durable commit. Restore it with a
-                    # create-exclusive link (never clobbers a third
-                    # racer's fresh commit) and report the conflict.
-                    if self._valid_doc(tmp + ".reclaimed", v):
-                        try:
-                            os.link(tmp + ".reclaimed", target)
-                        except FileExistsError:
-                            pass  # a third racer committed v meanwhile
-                        raise ConcurrentWriterError(
-                            f"version {v} at {self.log_dir} was "
-                            f"committed by another writer during "
-                            f"leftover reclamation") from None
-                try:
-                    os.link(tmp, target)
-                except FileExistsError:
-                    raise ConcurrentWriterError(
-                        f"version {v} at {self.log_dir} was committed "
-                        f"by another writer during leftover "
-                        f"reclamation") from None
-        finally:
-            for leftover in (tmp, tmp + ".reclaimed"):
-                try:
-                    os.remove(leftover)
-                except OSError:
-                    pass
 
 
 # ------------------------------------------------- object-store client
@@ -528,10 +238,11 @@ class InMemoryObjectStore(ObjectStoreClient):
 class PosixStore(ObjectStoreClient):
     """Local-filesystem binding of the client contract: keys are
     absolute file paths (the local "bucket" is the FS root). This is
-    NOT a test double — it is the deployment adapter that lets every
-    sidecar code path (landing segments, vacuum listings, source-blob
-    listings) speak the one request interface, so moving a table to a
-    real bucket swaps the client instance, not the code.
+    NOT a test double — it is the deployment adapter that lets the
+    local commit log (``VersionLog``) and every sidecar code path
+    (landing segments, vacuum listings, source-blob listings) speak the
+    one request interface, so moving a table to a real bucket swaps the
+    client instance, not the code.
 
     - ``put`` / ``put_if_absent`` are atomic (tmp + ``os.replace`` /
       ``os.link``), parents auto-created (object stores have no
@@ -651,29 +362,28 @@ class PosixStore(ObjectStoreClient):
         return sorted(out)
 
 
-def sidecar_store_for(log: CommitLog) -> ObjectStoreClient:
-    """The client the engine's sidecar files should ride on: the
-    commit log's own bucket client when the log is object-store
-    backed, else the local POSIX binding — so data/metadata always
-    live in the same store as their manifest."""
-    if isinstance(log, ObjectStoreLog):
-        return log.client
-    return PosixStore()
+class ObjectStoreLog:
+    """Versioned JSON payload log at ``<path>/<subdir>`` over an
+    ObjectStoreClient: the conditional PUT of ``v{N}.json`` IS the
+    commit, and the committed version is the highest valid listed one.
 
-
-class ObjectStoreLog(CommitLog):
-    """VersionLog over an ObjectStoreClient: the conditional PUT of
-    ``v{N}.json`` IS the commit. Same reader rule as VersionLog
-    (highest valid listed version; listing lag only hides versions),
-    but every filesystem call is a client request — this is the class
-    a real GCS/S3 deployment instantiates."""
+    ``keep`` bounds how many committed payload files are retained
+    (current + ``keep`` older); ``None`` disables pruning entirely for
+    deployments that need an unbounded history horizon (e.g. a long
+    ``changes_between()`` window with user-scheduled vacuum). Payloads
+    are pruned ONLY through ``keep`` (the vacuums GC data files, never
+    ``v{N}.json``), so ``keep=None`` grows the payload set O(commits)
+    forever, and every read LISTs it — on local disk as on a bucket:
+    ~86k keys/month at a 30 s cadence. Bound ``keep`` to the horizon
+    actually needed instead of running keep=None indefinitely.
+    """
 
     def __init__(self, path: str, subdir: str = "commitlog",
-                 keep: int | None = 8,
-                 client: ObjectStoreClient | None = None):
-        super().__init__(path, subdir, keep=keep)
-        self.client = client if client is not None \
-            else InMemoryObjectStore()
+                 keep: int | None = 8, *, client: ObjectStoreClient):
+        self.path = path
+        self.log_dir = os.path.join(path, subdir)
+        self.keep = keep
+        self.client = client
         # keys are bucket-relative: "<path>/<subdir>/v{N}.json"
         self._prefix = self.log_dir.rstrip("/") + "/"
         # writer-local floor: listing lag must not hide THIS writer's
@@ -685,31 +395,43 @@ class ObjectStoreLog(CommitLog):
     def _key(self, v: int) -> str:
         return f"{self._prefix}v{v}.json"
 
-    def _ensure_log_dir(self) -> None:
-        pass  # object stores have no directories
-
     # -- reads --
 
     def _listed_versions(self) -> list[int]:
+        # scoped to the version keys: the landing keeps its segment
+        # files under the same log prefix, and a read must not list them
         out = []
-        for k in self.client.list_keys(self._prefix):
+        for k in self.client.list_keys(self._prefix + "v"):
             m = _VFILE.match(k[len(self._prefix):])
             if m:
                 out.append(int(m.group(1)))
         return sorted(out)
 
-    def _valid(self, v: int) -> dict | None:
-        # a PUT object is complete by construction; validate the
-        # version stamp anyway (same invariant VersionLog checks)
-        try:
-            doc = self._payload(v)
-        except (FileNotFoundError, json.JSONDecodeError):
+    def _doc(self, key: str, v: int) -> dict | None:
+        """The payload at ``key`` if it is a complete commit of ``v``
+        (a bucket PUT is complete by construction; a local file may be
+        a torn pre-link-protocol leftover)."""
+        raw = self.client.get(key)
+        if raw is None:
             return None
-        return doc if doc.get("version") == v else None
+        try:
+            doc = json.loads(raw)
+        except ValueError:
+            return None
+        if not isinstance(doc, dict) or doc.get("version") != v:
+            return None
+        doc.pop("_writer", None)  # publish-attempt nonce, not payload
+        return doc
 
-    def _committed(self) -> tuple[int, dict] | None:
+    def _valid(self, v: int) -> dict | None:
+        return self._doc(self._key(v), v)
+
+    def read_committed(self) -> tuple[int, dict] | None:
         """(highest valid version, the payload its validation GET
-        read): one LIST and one GET when the listing is current."""
+        read), None before the first commit: one LIST and one GET when
+        the listing is current. Any valid listed file IS committed, so
+        the worst a lagging listing or a partially failed prune can
+        cause is a stale read — never a torn or shadowed one."""
         best = None
         for v in reversed(self._listed_versions()):
             doc = self._valid(v)
@@ -726,25 +448,49 @@ class ObjectStoreLog(CommitLog):
                 return self._floor, doc
         return best
 
-    def _raw_version(self) -> int:
-        rc = self._committed()
+    def version(self) -> int:
+        """Highest committed version, -1 before the first commit."""
+        rc = self.read_committed()
         return -1 if rc is None else rc[0]
 
-    def version(self) -> int:
-        return self._raw_version()  # no POSIX legacy layout to guard
-
-    def read_committed(self) -> tuple[int, dict] | None:
-        return self._committed()
-
     def _payload(self, v: int) -> dict:
+        """The stored payload of ``v``, unvalidated (a pre-seam
+        bucketed manifest below an adopted version is a bare map)."""
         raw = self.client.get(self._key(v))
         if raw is None:
             raise FileNotFoundError(self._key(v))
         doc = json.loads(raw)
-        doc.pop("_writer", None)  # publish-attempt nonce, not payload
+        doc.pop("_writer", None)
         return doc
 
     # -- writes --
+
+    def commit(self, payload: dict) -> int:
+        return self.commit_at(self.version() + 1, payload)
+
+    def commit_at(self, v: int, payload: dict) -> int:
+        """Commit exactly version ``v`` — the OCC primitive: a caller
+        that planned against version ``v-1`` commits AT ``v``, so a
+        concurrent writer taking ``v`` first surfaces as
+        ConcurrentWriterError instead of the stale plan silently
+        landing on a later version and erasing the other writer's
+        manifest changes (lost update). ``commit()`` is
+        ``commit_at(version()+1, ...)`` — fine for payloads not
+        derived from a prior read."""
+        self._check_payload(payload)
+        self._publish(v, payload)
+        if self.keep is not None:
+            self._prune(v - self.keep)
+        return v
+
+    @staticmethod
+    def _check_payload(payload: dict) -> None:
+        bad = RESERVED_PAYLOAD_KEYS & set(payload)
+        if bad:
+            raise ValueError(
+                f"payload carries log-reserved key(s) {sorted(bad)} — "
+                f"the commit log stamps these itself; nest caller "
+                f"metadata under its own key")
 
     def _publish(self, v: int, payload: dict) -> None:
         # _writer: a nonce unique to THIS publish attempt. An ambiguous
@@ -758,10 +504,10 @@ class ObjectStoreLog(CommitLog):
         # different writer's commit NEVER byte-matches ours, so a
         # zombie/failover dual-writer still surfaces as
         # ConcurrentWriterError instead of two silent successes over
-        # one interleaved data dir. Readers strip the nonce
-        # (_payload). The disambiguating GET also runs on a clean 412
-        # loss — one small extra read per lost race, at maintenance
-        # cadences a non-cost.
+        # one interleaved data dir. Readers strip the nonce (_doc).
+        # The disambiguating GET also runs on a clean 412 loss — one
+        # small extra read per lost race, at maintenance cadences a
+        # non-cost.
         doc = json.dumps({"version": v, "_writer": uuid.uuid4().hex,
                           **payload}, indent=1, sort_keys=True).encode()
         if not self.client.put_if_absent(self._key(v), doc):
@@ -772,27 +518,125 @@ class ObjectStoreLog(CommitLog):
         self._floor = max(self._floor, v)
 
     def _prune(self, keep_from: int) -> None:
+        """Drop payload files older than ``keep_from`` (data-dir GC is
+        the caller's job — it knows which files a stale reader may
+        still hold open)."""
         for v in self._listed_versions():
             if v < keep_from:
                 self.client.delete(self._key(v))
 
+    def reset(self) -> None:
+        """Erase every commit: the log reads as never-written. For the
+        single-writer wipe-and-rebuild path (e.g. re-seeding a
+        half-migrated table); data-file GC is the caller's job. Under
+        a lagging listing a just-committed version can survive one
+        reset and surface later — callers retry (the next commit
+        conflicts loudly rather than corrupting)."""
+        self._prune(float("inf"))
 
-def make_commit_log(path: str, impl: str = "pointer",
-                    subdir: str = "commitlog",
-                    keep: int | None = 8) -> CommitLog:
-    if impl == "pointer":
-        return PointerSwapLog(path, subdir, keep=keep)
-    if impl == "log":
+
+class VersionLog(ObjectStoreLog):
+    """The commit log on local disk: ``ObjectStoreLog`` over
+    ``PosixStore``, plus what only a filesystem can hold — a root-level
+    pre-seam ``CURRENT`` pointer (guard + ``adopt_legacy``) and a torn
+    ``v{N}.json`` (reclaimed by the next commit of ``N``)."""
+
+    def __init__(self, path: str, subdir: str = "commitlog",
+                 keep: int | None = 8):
+        # never rmdir the log dir: an empty manifest/ still marks the
+        # bucketed layout for the cross-backend guards
+        super().__init__(path, subdir, keep,
+                         client=PosixStore(rmdir_empty_parent=False))
+
+    def read_committed(self) -> tuple[int, dict] | None:
+        rc = super().read_committed()
+        if rc is None and legacy_root_version(self.path) is not None:
+            # a root pointer with nothing committed in the log: the dir
+            # predates the log subdirs, and reading it as empty would
+            # let the next commit reset the table over the live data
+            # that pointer still references
+            raise RuntimeError(
+                f"{self.path} has a root-level {LEGACY_POINTER} pointer "
+                f"from the pre-commit-seam layout but no commits under "
+                f"{self.log_dir} — migrate it with adopt_legacy() "
+                f"before reading or writing this log")
+        return rc
+
+    def adopt_legacy(self, payload: dict) -> int | None:
+        """Migrate a pre-seam root-level pointer into this log.
+
+        Re-publishes the pointed version through this log with
+        ``payload`` (the call site knows what the old layout implied),
+        then removes the root pointer. Idempotent and crash-safe: the
+        pointer is removed LAST, and a re-run that finds the log
+        already at >= the pointed version only clears the leftover
+        pointer. Returns the adopted version, or None if there was no
+        legacy pointer.
+        """
+        lv = legacy_root_version(self.path)
+        if lv is None:
+            return None
+        rc = super().read_committed()  # the guard would refuse
+        if (-1 if rc is None else rc[0]) < lv:
+            self._check_payload(payload)
+            self._publish(lv, payload)
+        os.remove(os.path.join(self.path, LEGACY_POINTER))
+        return lv
+
+    def _publish(self, v: int, payload: dict) -> None:
+        try:
+            super()._publish(v, payload)
+        except ConcurrentWriterError:
+            if self._valid(v) is not None:
+                raise
+            # the target is a torn leftover (with the link protocol a
+            # published file is complete by construction, so no LIVE
+            # writer owns it): reclaim it, then publish. A racer's
+            # commit in between still fails our conditional put.
+            self._reclaim(v)
+            super()._publish(v, payload)
+
+    def _reclaim(self, v: int) -> None:
+        """Take the torn ``v{N}.json`` out of the way EXCLUSIVELY, by
+        renaming it aside to a writer-unique name: of two racers
+        exactly one rename succeeds — a blind remove would let the
+        loser delete the winner's just-published commit
+        (remove-then-link TOCTOU)."""
+        target = self._key(v)
+        aside = os.path.join(self.log_dir,
+                             f".reclaimed-{uuid.uuid4().hex}")
+        try:
+            os.rename(target, aside)
+        except FileNotFoundError:
+            return  # another racer took it aside already
+        try:
+            # Between our validity check and the rename a racer may
+            # have reclaimed the leftover and published a VALID commit
+            # at target (a fresh inode — rename is not conditional), so
+            # what we moved aside could be a durable commit. Restore it
+            # with a create-exclusive link (never clobbers a third
+            # racer's fresh commit) and report the conflict.
+            if self._doc(aside, v) is not None:
+                try:
+                    os.link(aside, target)
+                except FileExistsError:
+                    pass  # a third racer committed v meanwhile
+                raise ConcurrentWriterError(
+                    f"version {v} at {self.log_dir} was committed by "
+                    f"another writer during leftover reclamation")
+        finally:
+            try:
+                os.remove(aside)
+            except OSError:
+                pass
+
+
+def make_commit_log(path: str, subdir: str = "commitlog",
+                    keep: int | None = 8,
+                    client: ObjectStoreClient | None = None
+                    ) -> ObjectStoreLog:
+    """The commit log at ``<path>/<subdir>``: on ``client`` (a bucket
+    deployment) when one is given, else on local disk."""
+    if client is None:
         return VersionLog(path, subdir, keep=keep)
-    if impl == "object-mock":
-        # shared per-(path) in-memory "bucket": independent log
-        # instances over the same dataset path see each other's
-        # commits, like real clients of one bucket — lets the whole
-        # pipeline run its manifests through request semantics
-        client = _MOCK_BUCKETS.setdefault(path, InMemoryObjectStore())
-        return ObjectStoreLog(path, subdir, keep=keep, client=client)
-    raise ValueError(f"unknown commit-log impl {impl!r} "
-                     f"(expected 'pointer', 'log', or 'object-mock')")
-
-
-_MOCK_BUCKETS: dict[str, InMemoryObjectStore] = {}
+    return ObjectStoreLog(path, subdir, keep=keep, client=client)

@@ -76,7 +76,6 @@ class CdcPipeline:
                  state_backend: str = "auto",
                  n_state_buckets: int = 16,
                  columns: list[str] | None = None,
-                 commit_impl: str = "pointer",
                  auto_bucket_rows: int = 5_000_000,
                  bucket_keep_versions: int | None = 1,
                  client=None, data_store=None):
@@ -117,11 +116,6 @@ class CdcPipeline:
         # at migration time.
         if state_backend not in ("versioned", "bucketed", "auto"):
             raise ValueError(f"unknown state_backend {state_backend!r}")
-        # commit_impl plumbs the commit-protocol seam (commitlog.py)
-        # through to every manifest this pipeline maintains: "pointer"
-        # (POSIX os.replace swap) or "log" (object-store-safe version
-        # log, no renames)
-        self.commit_impl = commit_impl
         self.state_backend = state_backend
         self.n_state_buckets = n_state_buckets
         self.auto_bucket_rows = auto_bucket_rows
@@ -138,7 +132,8 @@ class CdcPipeline:
         # client: config-only bucket deployment — the WHOLE sidecar
         # plane (state doc, version log / bucketed manifest, landing
         # interplay via ReplicationJob) rides this ObjectStoreClient;
-        # commit_impl is ignored where it applies. data_store is where
+        # without one every manifest commits by the same conditional
+        # PUT on local disk (commitlog.py). data_store is where
         # the state parquet's maintenance (orphan pruning) runs — the
         # bytes themselves go through Spark's own connectors either way
         self.client = client
@@ -158,16 +153,11 @@ class CdcPipeline:
             from .bucketed_state import BucketedStateTable
             self.bstate = BucketedStateTable(
                 spark, self.bucketed_dir, pk_cols, sort_cols,
-                n_buckets=n_state_buckets, commit_impl=commit_impl,
+                n_buckets=n_state_buckets,
                 keep_versions=bucket_keep_versions,
                 client=client, data_store=self.data_store)
-        elif client is not None:
-            from .commitlog import ObjectStoreLog
-            self.clog = ObjectStoreLog(self.state_dir, client=client)
-            # no legacy adoption: the pre-seam pointer layout is a
-            # POSIX artifact that cannot exist in a bucket
         else:
-            self.clog = make_commit_log(self.state_dir, commit_impl)
+            self.clog = make_commit_log(self.state_dir, client=client)
             # pre-seam layouts swapped CURRENT at the state-dir ROOT
             # (commitlog/ didn't exist); an un-adopted pointer would
             # read as version -1 and the next batch would silently
@@ -175,8 +165,10 @@ class CdcPipeline:
             # payload {"data_dir": "v{N}"} — adopt it into the log.
             # (A root pointer NEXT TO a manifest/ dir is the old
             # bucketed layout instead; leave it for the cross-backend
-            # guard in _current_version to reject.)
-            if not os.path.isdir(os.path.join(self.state_dir, "manifest")):
+            # guard in _current_version to reject. A bucket never
+            # holds the pre-seam POSIX layout.)
+            if client is None and not os.path.isdir(
+                    os.path.join(self.state_dir, "manifest")):
                 lv = legacy_root_version(self.state_dir)
                 if lv is not None:
                     self.clog.adopt_legacy({"data_dir": f"v{lv}"})
@@ -212,7 +204,7 @@ class CdcPipeline:
         Returns ONE analyzed DataFrame per committed version: while the
         commit log still names the same data dir, every call returns
         the same object, and a call costs one commit-log read (a LIST
-        on the ``log`` impls) and no Spark job. The handle refreshes
+        and a GET) and no Spark job. The handle refreshes
         when the log names a new dir — a commit by this instance (which
         seeds it, see ``_write_state``) or by any other writer. Never
         stale: committed dirs are attempt-unique and never rewritten.
@@ -505,7 +497,7 @@ class CdcPipeline:
         from .bucketed_state import BucketedStateTable
         b = BucketedStateTable(
             self.spark, self.bucketed_dir, self.pk_cols, self.sort_cols,
-            n_buckets=self.n_state_buckets, commit_impl=self.commit_impl,
+            n_buckets=self.n_state_buckets,
             keep_versions=self.bucket_keep_versions,
             client=self.client, data_store=self.data_store)
         # wipe through the log/client interfaces, NOT a local rmtree: a
@@ -682,8 +674,7 @@ def stream_to_landing_rollup(stream_df: DataFrame, landing_path: str,
                              group_cols: list[str], aggs,
                              granularity: str = "hour",
                              trigger: dict | None = None,
-                             checkpoint: str | None = None,
-                             commit_impl: str = "pointer"):
+                             checkpoint: str | None = None):
     """Streaming continuous aggregate: each micro-batch appends to the
     time-partitioned landing table, then brings the rollup up to date
     — landing write FIRST, so a crash between the two replays as a
@@ -736,7 +727,7 @@ def stream_to_landing_rollup(stream_df: DataFrame, landing_path: str,
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        committed = load_committed(landing_path, commit_impl) \
+        committed = load_committed(landing_path) \
             or {"batch_id": -1, "files": {}}
         if batch_id <= committed["batch_id"]:
             return  # replay of a published batch: already landed
@@ -761,11 +752,11 @@ def stream_to_landing_rollup(stream_df: DataFrame, landing_path: str,
                 if new:
                     committed["files"].setdefault(d, []).extend(new)
             committed["batch_id"] = batch_id
-            store_committed(landing_path, committed, commit_impl)
+            store_committed(landing_path, committed)
         finally:
             batch_df.unpersist()
         update_rollup(spark, landing_path, rollup_path,
-                      group_cols, aggs, commit_impl=commit_impl)
+                      group_cols, aggs)
 
     w = stream_df.writeStream.foreachBatch(handle)
     if checkpoint:

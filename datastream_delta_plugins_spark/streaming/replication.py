@@ -81,7 +81,6 @@ class ReplicationJob:
                  validate: bool = True,
                  state_backend: str = "auto",
                  n_state_buckets: int = 16,
-                 commit_impl: str = "pointer",
                  auto_bucket_rows: int = 5_000_000,
                  bucket_keep_versions: int | None = 1,
                  client=None, data_store=None, source_store=None):
@@ -131,7 +130,7 @@ class ReplicationJob:
             t.name: AvroLandingConverter(
                 spark, t.source_dir,
                 os.path.join(work_dir, "tables", t.name, "landing"),
-                columns=t.columns, commit_impl=commit_impl,
+                columns=t.columns,
                 path_layout=t.path_layout, client=client,
                 source_store=source_store, data_store=data_store)
             for t in tables if t.source_format == "avro"
@@ -157,7 +156,6 @@ class ReplicationJob:
             st = BucketedStateTable(
                 spark, os.path.join(work_dir, "tables", t.name, "state"),
                 t.pk_cols, n_buckets=n_state_buckets,
-                commit_impl=commit_impl,
                 keep_versions=bucket_keep_versions,
                 data_store=data_store, client=client)
             self.followers[t.name] = DeltaFollower(
@@ -182,7 +180,6 @@ class ReplicationJob:
                 state_backend=state_backend,
                 n_state_buckets=n_state_buckets,
                 columns=t.columns,
-                commit_impl=commit_impl,
                 auto_bucket_rows=auto_bucket_rows,
                 bucket_keep_versions=bucket_keep_versions,
                 client=client, data_store=data_store)
@@ -377,10 +374,12 @@ class ReplicationJob:
         ``maintenance_every=N`` additionally runs landing maintenance
         (compact once >= ``compact_min_batches`` dirs accumulated,
         then vacuum) every Nth converter cycle — safe to race the
-        converter since both sides commit through the OCC seam, and
-        the CDC merge is idempotent under the stream's replay of the
-        compacted dir. OPT-IN because that replay is O(landing) per
-        compaction: a 30 s scan cadence makes one dir per cycle, so
+        converter since both sides commit by the landing log's
+        conditional PUT (on local disk as on a bucket), so the loser
+        re-plans instead of overwriting, and the CDC merge is
+        idempotent under the stream's replay of the compacted dir.
+        OPT-IN because that replay is O(landing) per compaction: a
+        30 s scan cadence makes one dir per cycle, so
         long-running streams need SOME cadence (unbounded dir counts
         degrade listing/planning), but latency-sensitive deployments
         should schedule it in low-traffic windows instead. The cost is

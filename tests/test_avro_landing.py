@@ -13,6 +13,8 @@ from datastream_delta_plugins_spark.operators import cdc
 from datastream_delta_plugins_spark.sources import avro_ocf
 from datastream_delta_plugins_spark.sources.avro_landing import \
     AvroLandingConverter
+from datastream_delta_plugins_spark.streaming.commitlog import \
+    InMemoryObjectStore
 
 
 def _write_avro(d, name, events):
@@ -25,13 +27,15 @@ def _events(lo, hi, method=CDC, ct="INSERT"):
             for i in range(lo, hi)]
 
 
-@pytest.fixture(params=[{"commit_impl": "pointer"},
-                        {"commit_impl": "log"}])
+@pytest.fixture(params=[{}, {"client": InMemoryObjectStore}])
 def conv(request, spark, tmp_path):
+    """A converter whose manifest log is on local disk (conv0) or on a
+    mock bucket (conv1)."""
     src = tmp_path / "avro"
     src.mkdir()
+    kw = {k: make() for k, make in request.param.items()}
     return src, AvroLandingConverter(
-        spark, str(src), str(tmp_path / "landing"), **request.param)
+        spark, str(src), str(tmp_path / "landing"), **kw)
 
 
 def test_each_file_converted_exactly_once(spark, conv):
@@ -263,7 +267,7 @@ def test_replication_job_streams_raw_avro(spark, tmp_path):
 
 def test_replication_all_scale_features_combined(spark, tmp_path):
     """The full 100 TB configuration in one run: raw-Avro blobs through
-    the decode-once landing, every manifest on the object-store-safe
+    the decode-once landing, every manifest on the conditional-PUT
     version log, and the auto state backend crossing its threshold and
     migrating to the bucketed table mid-job — results identical to the
     simple configuration, no os.replace pointer files anywhere."""
@@ -278,7 +282,7 @@ def test_replication_all_scale_features_combined(spark, tmp_path):
         spark, str(tmp_path / "work"),
         [TableConfig("t1", str(src), ["EMPLOYEE_ID"],
                      source_format="avro")],
-        register_catalog=False, commit_impl="log",
+        register_catalog=False,
         state_backend="auto", auto_bucket_rows=10, n_state_buckets=4)
     job.run_batch()
     pipe = job.pipelines["t1"]
@@ -306,12 +310,12 @@ def test_replication_all_scale_features_combined(spark, tmp_path):
         spark, str(tmp_path / "work"),
         [TableConfig("t1", str(src), ["EMPLOYEE_ID"],
                      source_format="avro")],
-        register_catalog=False, commit_impl="log",
+        register_catalog=False,
         state_backend="auto", auto_bucket_rows=10, n_state_buckets=4)
     assert job2.pipelines["t1"].bstate is not None
     assert job2.pipelines["t1"].read_state().count() == 30
 
-    # version-log impl end to end: no pointer files under any manifest
+    # the version log end to end: no pointer files under any manifest
     pointers = [p for p, _, names in os.walk(tmp_path / "work")
                 for n in names if n == "CURRENT"]
     assert pointers == []
@@ -525,8 +529,8 @@ def test_write_failing_after_log_moved_on_is_a_conflict(spark, tmp_path,
     src = tmp_path / "avro"
     src.mkdir()
     landing = str(tmp_path / "landing")
-    a = AvroLandingConverter(spark, str(src), landing, commit_impl="log")
-    b = AvroLandingConverter(spark, str(src), landing, commit_impl="log")
+    a = AvroLandingConverter(spark, str(src), landing)
+    b = AvroLandingConverter(spark, str(src), landing)
     _write_avro(src, "k1_oracle-cdc-logminer_0.avro", _events(0, 5))
     real = al.convert_avro_to_parquet
     calls = {"n": 0}
@@ -795,8 +799,6 @@ def test_vacuum_survives_regressing_log_listing(spark, tmp_path):
     loss. Pinned by regressing the log listing between calls."""
     from datastream_delta_plugins_spark.sources.avro_landing import \
         LOG_SUBDIR
-    from datastream_delta_plugins_spark.streaming.commitlog import \
-        InMemoryObjectStore
 
     src = tmp_path / "avro"
     src.mkdir()
@@ -812,9 +814,10 @@ def test_vacuum_survives_regressing_log_listing(spark, tmp_path):
     # a FRESH maintenance process (no writer-local version floor) runs
     # vacuum against the regressing listing
     wrapped = _RegressingListClient(
-        inner, landing.rstrip("/") + "/" + LOG_SUBDIR + "/")
+        inner, landing.rstrip("/") + "/" + LOG_SUBDIR + "/v")
     maint = AvroLandingConverter(spark, str(src), landing, client=wrapped)
     removed = maint.vacuum()
+    assert wrapped.log_lists >= 1  # the wrapper sees the log's LISTs
     # nothing the true CURRENT references may go (b1 is stamped 1 < 2
     # and absent from v0's manifest — the stale-second-read casualty)
     assert [d for d in removed if d.startswith("b")] == []
@@ -896,3 +899,36 @@ def test_maintenance_latency_bounded_under_live_stream(spark, tmp_path):
         assert lat_s[len(lat) // 2] < 10.0, (lat, rows)
     finally:
         job.stop_all()
+
+
+def test_version_listing_skips_landing_segments(spark, tmp_path):
+    """The landing keeps its day segments under the manifest log's own
+    prefix; a manifest read must LIST only the version keys, not every
+    segment (the listing is per read, the segments grow with
+    retention)."""
+    import re
+
+    store = InMemoryObjectStore()
+    listed = []
+    real_list = store.list_keys
+
+    def recording_list(prefix, start_after=None):
+        keys = real_list(prefix, start_after=start_after)
+        listed.extend(keys)
+        return keys
+    store.list_keys = recording_list
+
+    src = tmp_path / "avro"
+    src.mkdir()
+    c = AvroLandingConverter(spark, str(src), str(tmp_path / "landing"),
+                             client=store)
+    for i in range(2):
+        _write_avro(src, f"k1_oracle-cdc-logminer_{i}.avro",
+                    _events(5 * i, 5 * i + 5))
+        assert c.convert_new()["converted"] == 1
+    assert any("/segments/" in k for k in real_list(c.landing_dir))
+
+    listed.clear()
+    assert c.clog.read_committed()[0] == 1
+    assert listed and all(re.search(r"/_landing_log/v\d+\.json$", k)
+                          for k in listed)

@@ -554,3 +554,12 @@ def test_auto_migration_moves_read_state_to_bucketed(spark, tmp_path):
     assert all("/state_bucketed/" in f for f in st.inputFiles())
     assert _snap(st) == _snap(cdc.materialize(
         _batch1(spark).unionByName(big), ["id"], keep_sort_keys=True))
+
+
+def test_local_merge_racing_merge_no_lost_update(spark, tmp_path,
+                                                 monkeypatch):
+    """Two merges racing on local disk (no client): the manifest commit
+    is a conditional PUT here too, so the loser re-plans and both
+    batches' rows survive."""
+    from test_commitlog_objectstore import merge_race_keeps_both_batches
+    merge_race_keeps_both_batches(spark, tmp_path, monkeypatch, None)

@@ -1,7 +1,16 @@
-"""Commit-protocol seam tests (streaming/commitlog.py): crash between
-data and commit, torn payloads, listing lag, concurrent writers, and
-the three sinks (versioned state, bucketed state, rollup) running on
-the object-store-safe impl end-to-end."""
+"""Commit-protocol tests (streaming/commitlog.py): crash between data
+and commit, torn payloads, listing lag, concurrent writers, and the
+three sinks (versioned state, bucketed state, rollup) on the local log
+end-to-end.
+
+The contract tests run once per store layout (``LAYOUTS``):
+
+- ``log``: a fresh local dir (``VersionLog`` over ``PosixStore``);
+- ``pointer``: a local dir whose log subdir still holds the ``CURRENT``
+  file of the retired pointer-swap protocol — the listing rule must
+  never read it;
+- ``bucket``: an ``InMemoryObjectStore`` with a one-LIST listing lag.
+"""
 
 import json
 import os
@@ -9,39 +18,66 @@ import os
 import pytest
 
 from datastream_delta_plugins_spark.streaming.commitlog import (
-    ConcurrentWriterError, PointerSwapLog, VersionLog, make_commit_log)
+    ConcurrentWriterError, InMemoryObjectStore, VersionLog, make_commit_log)
+
+LAYOUTS = ["pointer", "log", "bucket"]
+LOCAL_LAYOUTS = ["pointer", "log"]
 
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_empty_log_reads_none(tmp_path, impl):
-    log = make_commit_log(str(tmp_path), impl)
+def log_opener(root, layout: str):
+    """``open(**kw)`` -> a commit log at ``root`` in ``layout``; every
+    call opens a new instance (a restart) over the same store."""
+    client = InMemoryObjectStore(listing_lag=1) \
+        if layout == "bucket" else None
+    if layout == "pointer":
+        os.makedirs(os.path.join(root, "commitlog"))
+        with open(os.path.join(root, "commitlog", "CURRENT"), "w") as f:
+            f.write("0")  # stale: claims a version the dir never held
+
+    def open_log(**kw):
+        return make_commit_log(str(root), client=client, **kw)
+    return open_log
+
+
+def settled_read(open_log):
+    """A fresh reader's view once listing lag has expired (a bucket
+    hides a fresh key from one LIST)."""
+    r = open_log()
+    r.read_committed()
+    return r.read_committed()
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_empty_log_reads_none(tmp_path, layout):
+    log = log_opener(tmp_path, layout)()
     assert log.version() == -1
     assert log.read_committed() is None
 
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_commit_read_roundtrip_and_monotonic_versions(tmp_path, impl):
-    log = make_commit_log(str(tmp_path), impl)
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_commit_read_roundtrip_and_monotonic_versions(tmp_path, layout):
+    open_log = log_opener(tmp_path, layout)
+    log = open_log()
     assert log.commit({"doc": {"a": 1}}) == 0
     assert log.commit({"doc": {"a": 2}}) == 1
     v, payload = log.read_committed()
     assert v == 1 and payload["doc"] == {"a": 2}
     # a fresh instance (restart) sees the same committed state
-    log2 = make_commit_log(str(tmp_path), impl)
-    assert log2.read_committed()[0] == 1
+    assert settled_read(open_log)[0] == 1
 
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_crash_between_data_and_commit_keeps_previous(tmp_path, impl):
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_crash_between_data_and_commit_keeps_previous(tmp_path, layout):
     """Data files land first, the commit publishes last: a writer that
     dies in between must leave the previous version the committed one,
-    and the retry must reuse the same next version number (so the
-    orphan data dir is overwritten, not leaked under a new name)."""
-    log = make_commit_log(str(tmp_path), impl)
+    and the retry must plan the same next version."""
+    open_log = log_opener(tmp_path, layout)
+    log = open_log()
     log.commit({"data_dir": "v0"})
     # simulated crash: the v1 data dir exists, commit never ran
     os.makedirs(tmp_path / "v1")
     assert log.read_committed() == (0, {"version": 0, "data_dir": "v0"})
+    assert settled_read(open_log) == (0, {"version": 0, "data_dir": "v0"})
     # retry plans the same version and succeeds
     assert log.version() + 1 == 1
     assert log.commit({"data_dir": "v1"}) == 1
@@ -121,29 +157,65 @@ def test_version_log_tolerates_pruned_floor(tmp_path):
     assert log.version() == 11
 
 
-def test_pointer_log_pointer_is_inside_log_subdir(tmp_path):
-    """The pointer must not pollute a directory Spark reads as a
-    dataset root (underscore subdirs are skipped by Spark)."""
-    log = PointerSwapLog(str(tmp_path), subdir="_committed_log")
-    log.commit({"doc": 1})
-    assert not os.path.exists(tmp_path / "CURRENT")
-    assert os.path.exists(tmp_path / "_committed_log" / "CURRENT")
-
-
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_stale_reader_survives_new_commit(tmp_path, impl):
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_stale_reader_survives_new_commit(tmp_path, layout):
     """A reader holding version N keeps a readable payload while the
     writer commits N+1 (the prune window protects recent versions)."""
-    log = make_commit_log(str(tmp_path), impl)
+    open_log = log_opener(tmp_path, layout)
+    log = open_log()
     log.commit({"doc": "old"})
-    held_v, held_payload = log.read_committed()
+    held_v, held_payload = settled_read(open_log)
     log.commit({"doc": "new"})
-    # the held version's payload file is still on disk and re-readable
-    assert log._payload(held_v)["doc"] == "old"
+    # the held version's payload is still stored and re-readable
+    assert open_log()._payload(held_v)["doc"] == "old"
     assert log.read_committed()[1]["doc"] == "new"
 
 
-# -- the three sinks on the object-store-safe impl --
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_racing_writers_each_version_committed_once(tmp_path, layout):
+    """Writers racing over one log, each with its own instance and a
+    retry on conflict: every commit() that returns owns its version —
+    no two writers return the same version, and each returned
+    version reads back the payload its writer put."""
+    import sys
+    import threading
+
+    open_log = log_opener(tmp_path, layout)
+    won: list[tuple[int, str]] = []
+    lock = threading.Lock()
+
+    def writer(w):
+        log = open_log(keep=None)
+        for i in range(15):
+            while True:
+                try:
+                    v = log.commit({"doc": f"w{w}-{i}"})
+                    break
+                except ConcurrentWriterError:
+                    continue
+            with lock:
+                won.append((v, f"w{w}-{i}"))
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,))
+                   for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert len(won) == 8 * 15
+    assert sorted(v for v, _ in won) == list(range(8 * 15))
+    reader = open_log(keep=None)
+    for v, doc in won:
+        assert reader._payload(v)["doc"] == doc
+
+
+# -- the three sinks on the local log --
 
 
 def _batch(spark, n=20):
@@ -158,8 +230,7 @@ def test_versioned_pipeline_on_version_log(spark, tmp_path):
     from datastream_delta_plugins_spark.streaming.pipeline import CdcPipeline
     p = CdcPipeline(spark, "t1", str(tmp_path / "src"),
                     str(tmp_path / "w"), ["id"],
-                    sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
-                    commit_impl="log")
+                    sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"))
     p.apply_batch(_batch(spark), 0, streaming_barrier=False)
     assert p.read_state().count() == 20
     p.apply_batch(_batch(spark, 5), 1, streaming_barrier=False)
@@ -172,7 +243,7 @@ def test_bucketed_state_on_version_log(spark, tmp_path):
         BucketedStateTable
     t = BucketedStateTable(spark, str(tmp_path / "st"), ["id"],
                            sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
-                           n_buckets=4, commit_impl="log")
+                           n_buckets=4)
     t.merge(_batch(spark))
     assert t.read().count() == 20
     t.merge(_batch(spark, 3))
@@ -186,14 +257,10 @@ def test_rollup_manifest_on_version_log(spark, tmp_path):
 
     from datastream_delta_plugins_spark.sinks.rollup import (
         _load_manifest, _store_manifest, load_committed, store_committed)
-    _store_manifest(str(tmp_path), {"d=1": [1, 10, 0.0]},
-                    commit_impl="log")
-    assert _load_manifest(str(tmp_path), commit_impl="log") == \
-        {"d=1": [1, 10, 0.0]}
-    store_committed(str(tmp_path), {"batch_id": 3, "files": {}},
-                    commit_impl="log")
-    assert load_committed(str(tmp_path),
-                          commit_impl="log")["batch_id"] == 3
+    _store_manifest(str(tmp_path), {"d=1": [1, 10, 0.0]})
+    assert _load_manifest(str(tmp_path)) == {"d=1": [1, 10, 0.0]}
+    store_committed(str(tmp_path), {"batch_id": 3, "files": {}})
+    assert load_committed(str(tmp_path))["batch_id"] == 3
 
 
 # ----------------------------------------------- randomized crash schedules
@@ -204,19 +271,20 @@ from hypothesis import strategies as st  # noqa: E402
 
 @settings(max_examples=40, deadline=None)
 @given(schedule=st.lists(
-    st.sampled_from(["ok", "crash_replace", "crash_after_claim"]),
+    st.sampled_from(["ok", "crash_publish", "crash_after_claim"]),
     min_size=1, max_size=24))
-@pytest.mark.parametrize("impl", ["pointer", "log"])
+@pytest.mark.parametrize("layout", LAYOUTS)
 def test_crash_schedule_never_loses_or_tears_commits(tmp_path_factory,
-                                                     impl, schedule):
+                                                     layout, schedule):
     """Safety property under any interleaving of successful commits and
     commits that crash at the atomic-publish boundary: a fresh reader
-    always observes exactly the last commit() call that RETURNED —
-    never a torn payload, never a lost commit, never a crashed one —
-    and the writer always recovers (the next commit succeeds and
-    becomes readable)."""
+    (once listing lag expired) observes exactly the last commit() call
+    that RETURNED — never a torn payload, never a lost commit, never a
+    crashed one — and the writer always recovers (the next commit
+    succeeds and becomes readable)."""
     tmp = tmp_path_factory.mktemp("sched")
-    log = make_commit_log(str(tmp), impl)
+    open_log = log_opener(tmp, layout)
+    log = open_log()
     committed = []  # payloads whose commit() returned
 
     for i, action in enumerate(schedule):
@@ -224,33 +292,33 @@ def test_crash_schedule_never_loses_or_tears_commits(tmp_path_factory,
             v = log.commit({"doc": i})
             committed.append((v, i))
         else:
-            # crash at the atomic publish step: for the pointer impl
-            # that's the os.replace pointer swap (payload file already
-            # written), for the version log it's the os.link
-            # create-exclusive publish of the complete temp payload
-            # (temp file written, target never appears)
+            # crash at the atomic publish step: on local disk the
+            # os.link create-exclusive publish of the complete temp
+            # payload (temp file written, target never appears); on a
+            # bucket the conditional PUT request itself
             import datastream_delta_plugins_spark.streaming.commitlog \
                 as clmod
-            real_replace, real_link = clmod.os.replace, clmod.os.link
+            real_link = clmod.os.link
 
             def _boom(*a):
                 raise OSError("injected crash at publish")
             try:
-                clmod.os.replace = _boom
-                clmod.os.link = _boom
+                if layout == "bucket":
+                    log.client.put_if_absent = _boom
+                else:
+                    clmod.os.link = _boom
                 with pytest.raises(OSError, match="injected"):
                     log.commit({"doc": f"crashed-{i}"})
             finally:
-                clmod.os.replace = real_replace
                 clmod.os.link = real_link
+                vars(log.client).pop("put_if_absent", None)
         # a FRESH reader (no in-memory state) sees exactly the last
         # successful commit, at its returned version
-        reader = make_commit_log(str(tmp), impl)
+        got = settled_read(open_log)
         if not committed:
-            assert reader.read_committed() is None
+            assert got is None
         else:
             v, doc = committed[-1]
-            got = reader.read_committed()
             assert got is not None
             assert got[0] == v
             assert got[1]["doc"] == doc
@@ -259,8 +327,7 @@ def test_crash_schedule_never_loses_or_tears_commits(tmp_path_factory,
 
     # recovery: one more commit always succeeds and is readable
     v = log.commit({"doc": "final"})
-    assert make_commit_log(str(tmp), impl).read_committed() == \
-        (v, {"version": v, "doc": "final"})
+    assert settled_read(open_log) == (v, {"version": v, "doc": "final"})
 
 
 def test_reclamation_race_never_deletes_a_winners_commit(tmp_path,
@@ -295,7 +362,7 @@ def test_reclamation_race_never_deletes_a_winners_commit(tmp_path,
         log.commit({"doc": "loser"})
     monkeypatch.undo()
     # the winner's commit survived intact
-    assert make_commit_log(str(tmp_path), "log").read_committed() == \
+    assert VersionLog(str(tmp_path)).read_committed() == \
         (1, {"version": 1, "doc": "winner"})
 
     # and the symmetric view: the other racer takes the leftover aside
@@ -345,7 +412,7 @@ def test_reclamation_validates_what_it_moved_aside(tmp_path,
         log.commit({"doc": "loser"})
     monkeypatch.undo()
     # the winner's durable commit was restored intact, not lost
-    assert make_commit_log(str(tmp_path), "log").read_committed() == \
+    assert VersionLog(str(tmp_path)).read_committed() == \
         (1, {"version": 1, "doc": "winner"})
     # and no temp/reclaimed litter remains
     assert sorted(os.listdir(log.log_dir)) == ["v0.json", "v1.json"]

@@ -15,7 +15,7 @@ from datastream_delta_plugins_spark.streaming.commitlog import (
 
 
 def test_roundtrip_and_monotonic_versions():
-    log = ObjectStoreLog("bucket/t1")
+    log = ObjectStoreLog("bucket/t1", client=InMemoryObjectStore())
     assert log.read_committed() is None
     assert log.commit({"doc": 1}) == 0
     assert log.commit({"doc": 2}) == 1
@@ -210,11 +210,13 @@ def test_versioned_pipeline_on_object_store_mock(spark, tmp_path):
 
     from datastream_delta_plugins_spark.streaming.pipeline import CdcPipeline
 
+    store = InMemoryObjectStore()
+
     def mk():
         return CdcPipeline(spark, "t1", str(tmp_path / "src"),
                            str(tmp_path / "w"), ["id"],
                            sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
-                           commit_impl="object-mock")
+                           client=store)
 
     p = mk()
     p.apply_batch(_batch(spark), 0, streaming_barrier=False)
@@ -240,7 +242,7 @@ def test_read_committed_gets_the_payload_once():
     for log in (w, ObjectStoreLog("b/t", client=store)):
         store.requests.clear()
         assert log.read_committed() == (1, {"version": 1, "doc": 2})
-        assert store.requests == [("list", "b/t/commitlog/"),
+        assert store.requests == [("list", "b/t/commitlog/v"),
                                   ("get", "b/t/commitlog/v1.json")]
 
 
@@ -268,21 +270,25 @@ def test_bucketed_state_on_object_store_mock(spark, tmp_path):
     from datastream_delta_plugins_spark.streaming.bucketed_state import \
         BucketedStateTable
 
+    store = InMemoryObjectStore()
     t = BucketedStateTable(spark, str(tmp_path), ["id"],
                            sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
-                           n_buckets=4, commit_impl="object-mock")
+                           n_buckets=4, client=store)
     t.merge(_batch(spark))
     t.merge(_batch(spark, 5))
     assert t.read().count() == 20
     t2 = BucketedStateTable(spark, str(tmp_path), ["id"],
                             sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
-                            n_buckets=4, commit_impl="object-mock")
+                            n_buckets=4, client=store)
     assert t2.read().count() == 20
 
 
 def test_make_commit_log_object_mock_shares_bucket(tmp_path):
-    a = make_commit_log(str(tmp_path), "object-mock")
-    b = make_commit_log(str(tmp_path), "object-mock")
+    """Logs opened over one client see each other's commits, like
+    independent clients of one bucket."""
+    store = InMemoryObjectStore()
+    a = make_commit_log(str(tmp_path), client=store)
+    b = make_commit_log(str(tmp_path), client=store)
     a.commit({"doc": 1})
     assert b.read_committed()[1]["doc"] == 1
     assert json.loads(a.client.get(a._key(0)))["doc"] == 1
@@ -303,13 +309,14 @@ def test_landing_manifest_on_object_store_mock(spark, tmp_path):
     src = tmp_path / "avro"
     src.mkdir()
     _write_avro(src, "k1_oracle-cdc-logminer_0.avro", _events(0, 10))
+    store = InMemoryObjectStore()
     c = AvroLandingConverter(spark, str(src), str(tmp_path / "landing"),
-                             commit_impl="object-mock")
+                             client=store)
     assert c.convert_new()["converted"] == 1
     assert c.read_landing().count() == 10
     # a fresh converter instance over the same bucket sees the commit
     c2 = AvroLandingConverter(spark, str(src), str(tmp_path / "landing"),
-                              commit_impl="object-mock")
+                              client=store)
     assert c2.convert_new() == {"converted": 0, "batch_dir": None}
     # the landing-log plane left ZERO files on the local filesystem —
     # manifest and segments are bucket objects only
@@ -328,12 +335,14 @@ def test_auto_migration_on_object_store_mock(spark, tmp_path):
 
     from datastream_delta_plugins_spark.streaming.pipeline import CdcPipeline
 
+    store = InMemoryObjectStore()
+
     def mk():
         return CdcPipeline(spark, "t1", str(tmp_path / "src"),
                            str(tmp_path / "w"), ["id"],
                            sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
                            state_backend="auto", auto_bucket_rows=5,
-                           n_state_buckets=4, commit_impl="object-mock")
+                           n_state_buckets=4, client=store)
 
     p = mk()
     p.apply_batch(_batch(spark), 0, streaming_barrier=False)
@@ -360,15 +369,12 @@ def test_full_landing_lifecycle_on_lagging_mock_bucket(spark, tmp_path,
 
     from datastream_delta_plugins_spark.sources.avro_landing import \
         AvroLandingConverter
-    from datastream_delta_plugins_spark.streaming import commitlog as cl
 
     src = tmp_path / "avro"
     src.mkdir()
     landing = str(tmp_path / "landing")
-    bucket = cl.InMemoryObjectStore(listing_lag=1)
-    monkeypatch.setitem(cl._MOCK_BUCKETS, landing, bucket)
-    c = AvroLandingConverter(spark, str(src), landing,
-                             commit_impl="object-mock",
+    bucket = InMemoryObjectStore(listing_lag=1)
+    c = AvroLandingConverter(spark, str(src), landing, client=bucket,
                              retention_days=1.5)
     assert c.store is bucket  # sidecars ride the SAME bucket client
 
@@ -389,8 +395,7 @@ def test_full_landing_lifecycle_on_lagging_mock_bucket(spark, tmp_path,
     assert seg_gets == []
 
     # a FRESH converter (cold cache) parses each live segment once
-    c2 = AvroLandingConverter(spark, str(src), landing,
-                              commit_impl="object-mock",
+    c2 = AvroLandingConverter(spark, str(src), landing, client=bucket,
                               retention_days=1.5)
     before = len(bucket.requests)
     assert c2.convert_new() == {"converted": 0, "batch_dir": None}
@@ -445,10 +450,9 @@ def test_converter_racing_compactor_both_effects_land(spark, tmp_path,
     src = tmp_path / "avro"
     src.mkdir()
     landing = str(tmp_path / "landing")
-    c1 = AvroLandingConverter(spark, str(src), landing,
-                              commit_impl="object-mock")
-    c2 = AvroLandingConverter(spark, str(src), landing,
-                              commit_impl="object-mock")
+    store = InMemoryObjectStore()
+    c1 = AvroLandingConverter(spark, str(src), landing, client=store)
+    c2 = AvroLandingConverter(spark, str(src), landing, client=store)
     _write_avro(src, "k1_oracle-cdc-logminer_0.avro", _events(0, 10))
     assert c1.convert_new()["converted"] == 1
 
@@ -496,6 +500,14 @@ def test_bucketed_merge_racing_merge_no_lost_update(spark, tmp_path,
     manifest must NOT land over the winner's (lost update) — commit_at
     conflicts and the re-merge folds the batch into the winner's
     state. Every row from both writers survives."""
+    merge_race_keeps_both_batches(spark, tmp_path, monkeypatch,
+                                  InMemoryObjectStore())
+
+
+def merge_race_keeps_both_batches(spark, tmp_path, monkeypatch, client):
+    """Writer b merges between writer a's plan and a's manifest commit;
+    a must re-plan (OCC) and both batches' rows survive. ``client``:
+    the shared bucket, or None for local disk."""
     from test_bucketed_state import _changes
 
     from datastream_delta_plugins_spark.streaming.bucketed_state import \
@@ -505,7 +517,7 @@ def test_bucketed_merge_racing_merge_no_lost_update(spark, tmp_path,
 
     def mk():
         return BucketedStateTable(spark, path, ["id"], n_buckets=4,
-                                  commit_impl="object-mock")
+                                  client=client)
 
     def rows(*items):  # (id, val, sk) triples -> change batch
         return _changes(spark, [(i, v, "INSERT", sk, 1, "A", 1)
@@ -611,8 +623,7 @@ def test_rollup_occ_retry_replans_on_conflict(spark, tmp_path,
           .write.partitionBy("p").parquet(src))
     rp = str(tmp_path / "rollup")
     aggs = {"n": F.count(F.lit(1)), "s": F.sum("id")}
-    rollup_mod.update_rollup(spark, src, rp, [], aggs,
-                             commit_impl="log")
+    rollup_mod.update_rollup(spark, src, rp, [], aggs)
 
     # grow the source so the next update has work to do, then make the
     # first commit attempt lose to an interleaved competitor
@@ -622,8 +633,8 @@ def test_rollup_occ_retry_replans_on_conflict(spark, tmp_path,
     real_mk = rollup_mod._log_with_legacy
     state = {"fired": False}
 
-    def interleaving(path, impl, subdir, legacy):
-        log = real_mk(path, impl, subdir, legacy)
+    def interleaving(path, subdir, legacy):
+        log = real_mk(path, subdir, legacy)
         if subdir != rollup_mod.ROLLUP_LOG:
             return log
         real_commit_at = log.commit_at
@@ -631,19 +642,18 @@ def test_rollup_occ_retry_replans_on_conflict(spark, tmp_path,
         def commit_with_race(v, payload):
             if not state["fired"]:
                 state["fired"] = True
-                competitor = real_mk(path, impl, subdir, legacy)
+                competitor = real_mk(path, subdir, legacy)
                 competitor.commit_at(v, {"doc": {"raced": [0, 0, 0.0]}})
             return real_commit_at(v, payload)
         log.commit_at = commit_with_race
         return log
     monkeypatch.setattr(rollup_mod, "_log_with_legacy", interleaving)
-    res = rollup_mod.update_rollup(spark, src, rp, [], aggs,
-                                   commit_impl="log")
+    res = rollup_mod.update_rollup(spark, src, rp, [], aggs)
     monkeypatch.undo()
     assert state["fired"]
     assert res["changed"] == 3  # the retry re-aggregated
     got = {(r["p"], r["n"], r["s"]) for r in
-           rollup_mod.read_rollup(spark, rp, commit_impl="log")
+           rollup_mod.read_rollup(spark, rp)
            .collect()}
     want = {(r["p"], r["n"], r["s"]) for r in
             spark.read.parquet(src).groupBy("p")
@@ -664,12 +674,14 @@ def test_auto_migration_crash_retry_on_object_store_mock(spark,
 
     from datastream_delta_plugins_spark.streaming.pipeline import CdcPipeline
 
+    store = InMemoryObjectStore()
+
     def mk():
         return CdcPipeline(spark, "t1", str(tmp_path / "src"),
                            str(tmp_path / "w"), ["id"],
                            sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
                            state_backend="auto", auto_bucket_rows=5,
-                           n_state_buckets=4, commit_impl="object-mock")
+                           n_state_buckets=4, client=store)
 
     p = mk()
     real_put = p.doc.put
@@ -700,10 +712,11 @@ def test_bucketed_wipe_resets_manifest_and_data(spark, tmp_path):
     from datastream_delta_plugins_spark.streaming.bucketed_state import \
         BucketedStateTable
 
+    store = InMemoryObjectStore()
+
     def mk():
         return BucketedStateTable(spark, str(tmp_path / "st"), ["id"],
-                                  n_buckets=4,
-                                  commit_impl="object-mock")
+                                  n_buckets=4, client=store)
     t = mk()
     t.seed(__import__("datastream_delta_plugins_spark.operators.cdc",
                       fromlist=["cdc"]).materialize(

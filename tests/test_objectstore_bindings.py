@@ -12,8 +12,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 import pytest
 
 from datastream_delta_plugins_spark.streaming.commitlog import (
-    CommitLog, ConcurrentWriterError, InMemoryObjectStore, ObjectStoreLog,
-    PosixStore)
+    ConcurrentWriterError, InMemoryObjectStore, ObjectStoreLog, PosixStore)
 from datastream_delta_plugins_spark.streaming.objectstores import (
     GcsClient, S3Client)
 

@@ -795,12 +795,24 @@ def test_versioned_dual_writer_conflicts_and_preserves_winner(
     loser raises ConcurrentWriterError (the writer nonce defeats the
     content-equality absorption) and, because data dirs are now
     attempt-unique, the loser's parquet never touches the winner's."""
+    from datastream_delta_plugins_spark.streaming.commitlog import \
+        InMemoryObjectStore
+    _dual_writer_race(spark, tmp_path, InMemoryObjectStore())
+
+
+def test_versioned_dual_writer_conflicts_on_local_disk(spark, tmp_path):
+    """The same race with no client: the local commit log is the same
+    conditional PUT, so the second writer of a version loses loudly
+    instead of replacing the winner's commit."""
+    _dual_writer_race(spark, tmp_path, None)
+
+
+def _dual_writer_race(spark, tmp_path, client):
     import os
 
-    from datastream_delta_plugins_spark.streaming.commitlog import (
-        ConcurrentWriterError, InMemoryObjectStore)
+    from datastream_delta_plugins_spark.streaming.commitlog import \
+        ConcurrentWriterError
 
-    client = InMemoryObjectStore()
     src = str(tmp_path / "src")
     work = str(tmp_path / "work")
     _write(spark, f"{src}/f1_oracle-backfill_0",

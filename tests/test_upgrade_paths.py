@@ -1,16 +1,20 @@
 """Upgrade-path tests: directories written by the PRE-commit-seam
 layout (root-level CURRENT pointer, single-file rollup manifests) must
 never read as "empty" — that would let the next batch silently reset a
-live table — and must be adoptable in place. Also pins the round-6
-commit-log contract changes: configurable retention (keep), the
+live table — and must be adoptable in place; directories written by
+the retired pointer-swap protocol (in-log CURRENT) open as they are.
+Also pins the commit-log contract changes: configurable retention (keep), the
 link-protocol publish (a listed version file is complete by
 construction), and the merge payload carrying n_rows so the auto
 backend never re-counts state per micro-batch."""
 
 import json
 import os
+import re
 
 import pytest
+
+from test_commitlog import LAYOUTS, LOCAL_LAYOUTS, log_opener
 
 from datastream_delta_plugins_spark.streaming.commitlog import (
     VersionLog, legacy_root_version, make_commit_log)
@@ -18,25 +22,26 @@ from datastream_delta_plugins_spark.streaming.commitlog import (
 
 # ------------------------------------------------ legacy root pointer
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_root_pointer_refuses_to_read_as_empty(tmp_path, impl):
+@pytest.mark.parametrize("layout", LOCAL_LAYOUTS)
+def test_root_pointer_refuses_to_read_as_empty(tmp_path, layout):
     """An un-migrated pre-seam dir (root CURRENT, nothing in the log)
     must raise, not return -1 — version -1 would let the next commit
-    overwrite the live v0 data the pointer still references."""
+    overwrite the live v0 data the pointer still references. (A bucket
+    never holds this POSIX-only layout.)"""
     with open(tmp_path / "CURRENT", "w") as f:
         f.write("3")
-    log = make_commit_log(str(tmp_path), impl)
+    log = log_opener(tmp_path, layout)()
     with pytest.raises(RuntimeError, match="adopt_legacy"):
         log.version()
     with pytest.raises(RuntimeError, match="pre-commit-seam"):
         log.commit({"doc": 1})  # commit plans via version()
 
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_adopt_legacy_migrates_and_is_idempotent(tmp_path, impl):
+@pytest.mark.parametrize("layout", LOCAL_LAYOUTS)
+def test_adopt_legacy_migrates_and_is_idempotent(tmp_path, layout):
     with open(tmp_path / "CURRENT", "w") as f:
         f.write("2")
-    log = make_commit_log(str(tmp_path), impl)
+    log = log_opener(tmp_path, layout)()
     assert log.adopt_legacy({"data_dir": "v2"}) == 2
     assert not os.path.exists(tmp_path / "CURRENT")
     assert log.read_committed() == (2, {"version": 2, "data_dir": "v2"})
@@ -102,13 +107,11 @@ def test_bucketed_adopts_legacy_layout(spark, tmp_path):
                            n_buckets=4)
     t.merge(_batch(spark))
     assert t.read().count() == 20
-    # rewrite to the pre-seam shape: bare map json, root pointer, no
-    # in-log pointer
+    # rewrite to the pre-seam shape: bare map json, root pointer
     man = t.current_manifest()
     v = t.version()
     with open(tmp_path / "manifest" / f"v{v}.json", "w") as f:
         json.dump(man, f)  # bare bucket->dir map, no version/n_buckets
-    os.remove(tmp_path / "manifest" / "CURRENT")
     with open(tmp_path / "CURRENT", "w") as f:
         f.write(str(v))
     t2 = BucketedStateTable(spark, str(tmp_path), ["id"],
@@ -150,20 +153,124 @@ def test_rollup_adopts_legacy_single_file_manifests(tmp_path):
     assert load_committed(str(tmp_path))["batch_id"] == 7
 
 
+# ------------------------------------------------ pointer-swap layout
+
+def _to_pointer_layout(log_dir):
+    """Rewrite a commit log subdir as the retired pointer-swap protocol
+    left it: payloads stamped with their version but no ``_writer``
+    nonce, a ``CURRENT`` file naming the head, and a torn payload one
+    above the head (a writer that died mid-write). Returns (head, the
+    head's payload)."""
+    vs = sorted(int(m.group(1)) for n in os.listdir(log_dir)
+                if (m := re.fullmatch(r"v(\d+)\.json", n)))
+    for v in vs:
+        path = os.path.join(log_dir, f"v{v}.json")
+        with open(path) as f:
+            doc = json.load(f)
+        del doc["_writer"]
+        with open(path, "w") as f:
+            json.dump(doc, f, indent=1, sort_keys=True)
+    head = vs[-1]
+    with open(os.path.join(log_dir, "CURRENT"), "w") as f:
+        f.write(str(head))
+    with open(os.path.join(log_dir, f"v{head + 1}.json"), "w") as f:
+        f.write('{"version": %d, "da' % (head + 1))
+    return head, doc
+
+
+def _site(spark, tmp_path, kind):
+    """(open, log dir, commit log of an instance, advance(inst, i) ->
+    rows the site then holds, rows(inst)) for one manifest site."""
+    from pyspark.sql import functions as F
+
+    if kind in ("versioned", "bucketed"):
+        from datastream_delta_plugins_spark.streaming.pipeline import \
+            CdcPipeline
+        work = str(tmp_path / "w")
+
+        def open_site():
+            return CdcPipeline(spark, "t1", str(tmp_path / "src"), work,
+                               ["id"], state_backend=kind,
+                               sort_cols=("_sk1", "_sk2", "_sk3", "_sk4"),
+                               n_state_buckets=4)
+
+        def advance(p, i):
+            p.apply_batch(_batch(spark, 10 * (i + 1)), i,
+                          streaming_barrier=False)
+
+        def log_of(p):
+            return p.bstate.clog if p.bstate else p.clog
+        sub = "commitlog" if kind == "versioned" else "manifest"
+        return (open_site, os.path.join(work, "state", sub), log_of,
+                advance, lambda p: p.read_state().count())
+    if kind == "landing":
+        from test_avro_landing import _events, _write_avro
+
+        from datastream_delta_plugins_spark.sources.avro_landing import (
+            LOG_SUBDIR, AvroLandingConverter)
+        src = tmp_path / "avro"
+        src.mkdir()
+        landing = str(tmp_path / "landing")
+
+        def advance(c, i):
+            _write_avro(src, f"k1_oracle-cdc-logminer_{i}.avro",
+                        _events(10 * i, 10 * i + 10))
+            assert c.convert_new()["converted"] == 1
+        return (lambda: AvroLandingConverter(spark, str(src), landing),
+                os.path.join(landing, LOG_SUBDIR), lambda c: c.clog,
+                advance, lambda c: c.read_landing().count())
+    from datastream_delta_plugins_spark.sinks.rollup import (
+        ROLLUP_LOG, read_rollup, update_rollup)
+    src, rp = str(tmp_path / "src"), str(tmp_path / "rollup")
+
+    def advance(_, i):
+        (spark.range(10 * i, 10 * i + 10)
+              .selectExpr("id", "CAST(id % 2 AS INT) AS p")
+              .write.mode("append").partitionBy("p").parquet(src))
+        update_rollup(spark, src, rp, [], {"n": F.count(F.lit(1))})
+    return (lambda: rp, os.path.join(rp, ROLLUP_LOG),
+            lambda _: make_commit_log(rp, ROLLUP_LOG), advance,
+            lambda _: read_rollup(spark, rp).agg(F.sum("n")).first()[0])
+
+
+@pytest.mark.parametrize("kind",
+                         ["versioned", "bucketed", "landing", "rollup"])
+def test_pointer_swap_layout_opens_in_place(spark, tmp_path, kind):
+    """A log subdir the retired pointer-swap protocol wrote opens at
+    the pointer's version with the same payload, with no migration;
+    the next commit lands one above it, and the torn payload a crashed
+    writer left there is ignored by reads and reclaimed by that
+    commit."""
+    open_site, log_dir, log_of, advance, rows = _site(spark, tmp_path,
+                                                      kind)
+    site = open_site()
+    advance(site, 0)
+    advance(site, 1)
+    head, payload = _to_pointer_layout(log_dir)
+
+    again = open_site()
+    assert log_of(again).read_committed() == (head, payload)
+    assert rows(again) == 20
+    advance(again, 2)
+    assert log_of(open_site()).read_committed()[0] == head + 1
+    assert rows(open_site()) == 30
+    assert not [n for n in os.listdir(log_dir) if n.startswith(".")]
+
+
 # ------------------------------------------------ retention (keep)
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_keep_none_disables_pruning(tmp_path, impl):
-    log = make_commit_log(str(tmp_path), impl, keep=None)
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_keep_none_disables_pruning(tmp_path, layout):
+    log = log_opener(tmp_path, layout)(keep=None)
     for i in range(20):
         log.commit({"doc": i})
     for v in range(20):
         assert log._payload(v)["doc"] == v  # nothing pruned
 
 
-@pytest.mark.parametrize("impl", ["pointer", "log"])
-def test_keep_bounds_retained_payloads(tmp_path, impl):
-    log = make_commit_log(str(tmp_path), impl, keep=12)
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_keep_bounds_retained_payloads(tmp_path, layout):
+    log = log_opener(tmp_path, layout)(keep=12)
     for i in range(20):
         log.commit({"doc": i})
     assert log._payload(7)["doc"] == 7  # v7..v19 retained (keep+1)
