@@ -26,9 +26,7 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from collections.abc import Mapping
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -7,11 +7,20 @@ and relies on the bucket's TTL to retire it (reference:
 DatastreamEventConsumer.java:182-199, DatastreamEventReader.java:213-281
 mark-after-commit). This module is that discipline for the Spark
 engine: an incremental converter that decodes each new Avro file ONCE
-(`convert_avro_to_parquet`, the worker-side pyarrow writer — decode to
-one Arrow batch, write parquet in place, no JVM row materialization)
-into a parquet landing directory, after which every
-consumer — the CDC merge stream, re-merges, rollups, ad-hoc queries —
-reads parquet and never touches Avro again.
+(`convert_avro_to_parquet`: decode to one Arrow batch, write parquet
+with pyarrow, no JVM row materialization) into a parquet landing
+directory, after which every consumer — the CDC merge stream,
+re-merges, rollups, ad-hoc queries — reads parquet and never touches
+Avro again.
+
+A batch of ONE new file (on a local default filesystem) converts in
+the driver process and starts no Spark job: binaryFile never splits a
+file, so the distributed plan would be one task that pays a job launch
+and a Python worker start for no parallelism (the reference likewise
+reads each blob in its own consumer process). Batches of two or more
+files convert as a mapInArrow job, one task per file. Either way the
+batch's schema fingerprint comes from the decode plan, not from reading
+the written parquet back.
 
 Crash safety rides the commit seam (streaming/commitlog.py):
 
@@ -67,6 +76,8 @@ from .avro_ocf import convert_avro_to_parquet
 
 LOG_SUBDIR = "_landing_log"
 SEG_SUBDIR = "segments"
+#: one {batch dir}.json per compaction attempt: its input batch dirs
+CMP_SUBDIR = "compactions"
 
 #: batch dir: b{version}[-nonce]
 _BDIR = attempt_name_re("b")
@@ -107,6 +118,7 @@ class AvroLandingConverter:
         self.path_layout = path_layout
         self.occ_retries = occ_retries
         self.seg_dir = os.path.join(landing_dir, LOG_SUBDIR, SEG_SUBDIR)
+        self.cmp_dir = os.path.join(landing_dir, LOG_SUBDIR, CMP_SUBDIR)
         # client: config-only bucket deployment — a real
         # ObjectStoreClient (e.g. objectstores.GcsClient/S3Client)
         # carries the whole sidecar plane, manifest log included
@@ -257,12 +269,12 @@ class AvroLandingConverter:
             bdir = attempt_unique_name("b", batch)
             out = os.path.join(self.data_dir, bdir)
 
-            def write():
-                convert_avro_to_parquet(
+            # the fingerprint schema is the decode plan's, as Spark
+            # reads the written parquet back: no schema-read job
+            schema = self._write_attempt(
+                ver, lambda: convert_avro_to_parquet(
                     self.spark, new, out, columns=self.columns,
-                    avro_schema=self.avro_schema)
-                return self.spark.read.parquet(out).schema
-            schema = self._write_attempt(ver, write)
+                    avro_schema=self.avro_schema).schema)
             ctx.update(files=new, bdir=bdir, schema=schema, stamp=batch)
         now = time.time()
         segments = self._updated_segments(committed, new, now,
@@ -400,8 +412,8 @@ class AvroLandingConverter:
         planning exactly like the 15 s file-rotation problem the
         partitioned sink compacts). Data first, commit last: the
         compacted dir lands under the NEXT version's name, the commit
-        swaps the manifest to reference only it, and the superseded
-        batch dirs become orphans for vacuum(). A compaction across
+        swaps the manifest's inputs for it, and the superseded batch
+        dirs become orphans for vacuum(). A compaction across
         drifted vintages materializes the MERGED schema, so the new
         dir's single fingerprint is the union schema's. Returns
         {"compacted": n_dirs | 0}.
@@ -410,41 +422,81 @@ class AvroLandingConverter:
         consumer: the stream's file source sees the compacted dir as
         new data and re-merges every row it contains — correct (the
         CDC merge is idempotent under replay) but O(landing) of wasted
-        work per compaction. Racing a converter's commit re-plans with
-        a bounded OCC retry (the converter's new batch joins the next
-        compaction instead of being lost)."""
+        work per compaction.
+
+        Losing the commit to a converter does not redo the rewrite: the
+        next OCC attempt re-reads the log and, while every input is
+        still listed, commits the written dir on top of the newer
+        manifest (the batches added since the plan stay referenced). A
+        converter that commits faster than one rewrite therefore cannot
+        starve it. Only a lost input (another compaction won) re-plans
+        and rewrites."""
         from ..streaming.retry import occ_retry
-        return occ_retry(lambda: self._compact_attempt(min_batches),
+        ctx: dict = {}
+        return occ_retry(lambda: self._compact_attempt(min_batches, ctx),
                          retries=self.occ_retries)
 
-    def _compact_attempt(self, min_batches: int) -> dict:
+    def _compact_attempt(self, min_batches: int, ctx: dict) -> dict:
         ver, committed = self._committed_versioned()
-        dirs = committed["batch_dirs"]
-        if len(dirs) < min_batches:
-            return {"compacted": 0}
-        df = self._read_dirs(committed, dirs)
-        batch = ver + 1
-        bdir = attempt_unique_name("b", batch)
-        self._write_attempt(ver, lambda: df.write.mode("overwrite")
-                            .parquet(os.path.join(self.data_dir, bdir)))
-        # segments ride through unchanged from the SAME read the plan
-        # used; commit_at makes any racing advance (e.g. a converter's
-        # new batch, absent from our rewrite) a conflict that re-plans
-        # the whole attempt
+        listed = committed["batch_dirs"]
+        if ctx and set(ctx["inputs"]) <= set(listed):
+            # commit-time rebase: a commit since the plan only added
+            # dirs (a converter's), so the written rewrite is still
+            # exact while every input is listed
+            bdir, inputs, fp = ctx["bdir"], ctx["inputs"], ctx["fp"]
+        else:
+            if len(listed) < min_batches:
+                return {"compacted": 0}
+            inputs = list(listed)
+            df = self._read_dirs(committed, inputs)
+            bdir = attempt_unique_name("b", ver + 1)
+            # record the inputs BEFORE any data lands in the dir, so
+            # vacuum() can tell an in-flight compaction (every input
+            # still listed: it may yet rebase and commit) from a dead one
+            self.store.put(os.path.join(self.cmp_dir, bdir + ".json"),
+                           json.dumps(inputs).encode())
+            self._write_attempt(ver, lambda: df.write.mode("overwrite")
+                                .parquet(os.path.join(self.data_dir, bdir)))
+            fp = _schema_fp(df.schema)
+            ctx.update(bdir=bdir, inputs=inputs, fp=fp)
+        # the newest manifest's segments and its batches added since
+        # the plan ride on; commit_at makes a racing advance a conflict
+        # that the next attempt rebases over
+        added = [d for d in listed if d not in inputs]
         payload = {"segments": committed.get("segments", {}),
-                   "batch_dirs": [bdir],
-                   "schemas": {bdir: _schema_fp(df.schema)}}
+                   "batch_dirs": [bdir] + added,
+                   "schemas": {bdir: fp, **{
+                       d: committed["schemas"][d] for d in added
+                       if d in committed["schemas"]}}}
         if committed.get("files"):
             payload["files"] = committed["files"]  # legacy set rides on
-        self.clog.commit_at(batch, payload)
-        return {"compacted": len(dirs)}
+        self.clog.commit_at(ver + 1, payload)
+        return {"compacted": len(inputs)}
+
+    def _in_flight_compaction(self, d: str, live: set) -> bool:
+        """An unreferenced dir is a compaction that may still commit
+        while every input its record names is listed in CURRENT (inputs
+        only ever leave the manifest, so once one is gone the
+        compaction abandons). Converter dirs carry no record."""
+        raw = self.store.get(os.path.join(self.cmp_dir, d + ".json"))
+        return raw is not None and set(json.loads(raw)) <= live
 
     def vacuum(self) -> list[str]:
         """Delete data dirs the CURRENT manifest no longer references —
         crash orphans and batches superseded by compact() — and
         segment files superseded by later rewrites. In-flight readers
         of the previous version should finish first (same contract as
-        BucketedStateTable.vacuum keep_versions=0)."""
+        BucketedStateTable.vacuum keep_versions=0).
+
+        A compaction dir whose recorded inputs are all still live is
+        never collected, whatever its stamp: that compaction may yet
+        rebase and commit. A crashed one is therefore kept until a
+        later compaction supersedes one of its inputs. The record lives
+        exactly as long as the dir's data: a rebased compaction commits
+        past its stamp, so a stale snapshot between the two (a lagging
+        log listing, or a vacuum that read just before the commit) sees
+        the committed dir unreferenced and below the stamp guard, and
+        only its record, with every input still live there, spares it."""
         # ONE snapshot: live set and the stamp guard must derive from
         # the SAME read — a second CURRENT read may lag (regress) on an
         # object-store listing, and a lagging live set under a fresher
@@ -455,19 +507,28 @@ class AvroLandingConverter:
         removed = []
         dprefix = self.data_dir.rstrip("/") + "/"
         dead_dirs: list[str] = []
-        for k in self.data_store.list_keys(dprefix):
-            d = k[len(dprefix):].split("/", 1)[0]
+        spared: dict[str, bool] = {}
+
+        def dead(d: str) -> bool:
             m = _BDIR.match(d)
             # version guard: an unreferenced dir stamped AT or above
             # the current version may belong to a live writer — a
             # concurrent first attempt (stamp cur+1) or an OCC retry
             # reusing its decode (stamp == cur; convert_new's reuse
-            # condition mirrors this bound). Only strictly-older
-            # orphans are collectable; they become so as soon as any
-            # commit advances past their stamp (a writer still writing
-            # one is doomed anyway: _write_attempt reports its failed
-            # write as the conflict).
-            if m and d not in live and int(m.group(1)) < cur:
+            # condition mirrors this bound). Strictly-older converter
+            # orphans are collectable as soon as any commit advances
+            # past their stamp (a writer still writing one is doomed
+            # anyway: _write_attempt reports its failed write as the
+            # conflict). An older compaction dir is spared while all
+            # its inputs are live: its commit may still rebase.
+            if not m or d in live or int(m.group(1)) >= cur:
+                return False
+            if d not in spared:
+                spared[d] = self._in_flight_compaction(d, live)
+            return not spared[d]
+        for k in self.data_store.list_keys(dprefix):
+            d = k[len(dprefix):].split("/", 1)[0]
+            if dead(d):
                 self.data_store.delete(k)
                 if d not in dead_dirs:
                     dead_dirs.append(d)
@@ -481,4 +542,12 @@ class AvroLandingConverter:
                 self.store.delete(k)
                 self._seg_cache.pop(s, None)
                 removed.append(os.path.join(SEG_SUBDIR, s))
+        # a compaction record goes in the same pass as its dir's data,
+        # and on the same verdict (also when no data was ever written)
+        cprefix = self.cmp_dir.rstrip("/") + "/"
+        for k in sorted(self.store.list_keys(cprefix)):
+            d = k[len(cprefix):].removesuffix(".json")
+            if dead(d):
+                self.store.delete(k)
+                removed.append(os.path.join(CMP_SUBDIR, d + ".json"))
         return removed

@@ -17,7 +17,10 @@ executors via mapInArrow — per file, the native opcode decoder
 (avro_ckernel) when a C compiler is available and the schema is inside
 its subset, else this module's closure tree; both emit identical Arrow
 batches. At 100 TB the unit of parallelism is the file, exactly like
-the reference's per-blob consumer loop.
+the reference's per-blob consumer loop. A parquet conversion of a
+single file runs the same per-file generator in the driver process
+(`convert_avro_to_parquet`): one file is one task either way, and the
+driver skips the job launch and the Python worker.
 
 Per-tier decode rate, one file to columns, on the CDC envelope of
 `bench.write_avro_fixture` (first 40k records: 7.35 MB uncompressed,
@@ -539,7 +542,8 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
     """Shared decode-plan builder: (bin_df, decode generator, Spark
     out_schema). `read_avro_changes` maps the generator into a
     DataFrame; `convert_avro_to_parquet` wraps it to write parquet in
-    the worker without ever materializing JVM rows.
+    the worker without ever materializing JVM rows (a one-file
+    conversion runs `_decode_plan`'s generator in the driver instead).
 
     Decode is the C kernel of `avro_ckernel` whenever it is available
     and the file's schema is inside its subset — columns flow from the
@@ -563,6 +567,20 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
     (that tier only — raise instead of falling back; the equivalence
     tests diff the tiers).
     """
+    bin_df = spark.read.format("binaryFile").load(path)
+    if avro_schema is None:
+        head = bin_df.select("content").head()
+        if head is None:
+            raise ValueError(f"no Avro files under {path!r}")
+        avro_schema = read_ocf_schema(bytes(head[0]))
+    decode, out_schema = _decode_plan(avro_schema, columns, decoder)
+    return bin_df, decode, out_schema
+
+
+def _decode_plan(schema, columns=None, decoder: str = "auto"):
+    """(decode generator, Spark out_schema) for reader schema ``schema``:
+    the part of `_arrow_decode_plan` that needs no Spark session, so a
+    driver-side conversion runs the same generator without a scan."""
     if decoder not in ("auto", "scalar", "ckernel"):
         raise ValueError(f"unknown decoder {decoder!r}")
     from pyspark.sql import types as T
@@ -570,14 +588,6 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
     from ..schema.avro_mapping import avro_to_spark
     from .changes import META_COLS, payload_output_name
 
-    bin_df = spark.read.format("binaryFile").load(path)
-    if avro_schema is not None:
-        schema = avro_schema
-    else:
-        head = bin_df.select("content").head()
-        if head is None:
-            raise ValueError(f"no Avro files under {path!r}")
-        schema = read_ocf_schema(bytes(head[0]))
     by_name = {f["name"]: f["type"] for f in schema["fields"]}
     payload_schema = _unwrap_nullable(by_name["payload"])
     payload_fields = [(f["name"], f["type"])
@@ -852,7 +862,7 @@ def _arrow_decode_plan(spark, path, columns=None, avro_schema=None,
             yield out
 
     decode.per_file = decode_files
-    return bin_df, decode, out_schema
+    return decode, out_schema
 
 
 def read_avro_changes(spark, path: str, columns=None, avro_schema=None,
@@ -890,37 +900,106 @@ def read_avro_changes(spark, path: str, columns=None, avro_schema=None,
                   .mapInArrow(decode, out_schema))
 
 
+class ConvertedFiles(list):
+    """`convert_avro_to_parquet`'s manifest rows, plus ``schema``: the
+    Spark schema its parquet files read back with."""
+
+    def __init__(self, rows, schema):
+        super().__init__(rows)
+        self.schema = schema
+
+
+def _one_local_file(spark, path) -> str | None:
+    """The absolute local path when ``path`` (a string or a one-entry
+    list) names exactly one regular file on the driver's filesystem
+    and Spark resolves it there too (a path without a scheme resolves
+    against ``fs.defaultFS``, so the default filesystem must be the
+    local one); None for directories, globs, several paths and URIs."""
+    if isinstance(path, (list, tuple)):
+        if len(path) != 1:
+            return None
+        path = path[0]
+    if not isinstance(path, str) or ":" in path.split("/", 1)[0]:
+        return None  # a URI scheme: Spark resolves it
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS") or "file:///"
+    if not default_fs.startswith("file:"):
+        return None
+    return os.path.abspath(path) if os.path.isfile(path) else None
+
+
+def _read_back_schema(out_schema):
+    """``out_schema`` as Spark reads the converted parquet: the writer
+    stamps top-level naive timestamps UTC (TimestampNTZ reads back as
+    TIMESTAMP), and a file source makes every field nullable."""
+    from pyspark.sql import types as T
+    return T.StructType([
+        T.StructField(f.name, T.TimestampType()
+                      if isinstance(f.dataType, T.TimestampNTZType)
+                      else f.dataType, True)
+        for f in out_schema.fields])
+
+
 def convert_avro_to_parquet(spark, path, out_dir: str, columns=None,
                             avro_schema=None,
-                            compression: str = "snappy") -> list[dict]:
+                            compression: str = "snappy") -> ConvertedFiles:
     """Decode-once Avro -> parquet conversion that never materializes a
-    JVM row: each worker decodes a file to ONE Arrow batch and writes
-    it to parquet with pyarrow directly (timestamps stamped UTC so the
-    files read back with the exact schema Spark's own writer would
-    produce) — only a per-file manifest row crosses back to the driver.
+    JVM row: each file is decoded to ONE Arrow batch and written to
+    parquet with pyarrow directly (timestamps stamped UTC so the files
+    read back with the exact schema Spark's own writer would produce).
     Skipping the Arrow->InternalRow->parquet round trip is the
     conversion-path analog of the worker-side T3 normalization: the
     decode itself stopped being the bound once the rows did.
+
+    Where the conversion runs depends on the file count alone:
+
+      - exactly one local file (a path, or a one-entry list, naming a
+        regular file) converts in the calling process. Spark's plan
+        would be one task anyway, because binaryFile never splits a
+        file, and that task pays a job launch plus a Python worker
+        start for no parallelism. The driver reads the bytes once,
+        takes the reader schema from their header, and feeds them
+        through the same per-file generator a worker runs, so the
+        parquet bytes and the manifest row (``source_file`` is
+        binaryFile's ``file:`` path) are the same as the distributed
+        path's;
+      - anything else (several files, a directory, a glob, a URI, or
+        any path when ``fs.defaultFS`` is not the local filesystem) is
+        a binaryFile scan -> mapInArrow job, one task per file
+        — at 100 TB the unit of parallelism is the file — and only a
+        per-file manifest row crosses back to the driver.
+
+    The one-file side of this rule is measured (perfbench cdc-steady:
+    every batch there is one file). The multi-file side is not: no
+    workload converts a backlog, so whether the driver would also win
+    for a few local files, and where the crossover lies, is unknown.
 
     The output file name is a digest of the source path, so a crashed
     conversion's retry overwrites its own partial files (the same
     idempotence rule as the landing's batch dirs).
 
-    ``out_dir`` must be visible to every executor (shared filesystem
-    locally; on a cluster, a fuse mount or a pyarrow.fs URI — pyarrow's
-    parquet writer speaks GCS/S3/HDFS natively, so pointing this at an
-    object store is a filesystem-handle change, not a redesign).
+    ``out_dir`` must be visible to every executor and to the driver
+    (shared filesystem locally; on a cluster, a fuse mount or a
+    pyarrow.fs URI — pyarrow's parquet writer speaks GCS/S3/HDFS
+    natively, so pointing this at an object store is a
+    filesystem-handle change, not a redesign).
 
-    Returns the collected manifest: [{"source_file", "file", "n_rows"}]
-    (contract-bounded driver collect: one row per converted file).
+    Returns the manifest [{"source_file", "file", "n_rows"}], one row
+    per converted file, as a `ConvertedFiles` whose ``schema`` is the
+    Spark schema the written parquet reads back with (no read needed).
     """
-    bin_df, decode, _out_schema = _arrow_decode_plan(
-        spark, path, columns=columns, avro_schema=avro_schema)
-    from pyspark.sql import types as T
-    manifest_schema = T.StructType([
-        T.StructField("source_file", T.StringType()),
-        T.StructField("file", T.StringType()),
-        T.StructField("n_rows", T.LongType())])
+    import pyarrow as pa
+
+    local = _one_local_file(spark, path)
+    if local is not None:
+        with open(local, "rb") as f:
+            raw = f.read()
+        decode, out_schema = _decode_plan(
+            avro_schema if avro_schema is not None
+            else read_ocf_schema(raw), columns)
+    else:
+        bin_df, decode, out_schema = _arrow_decode_plan(
+            spark, path, columns=columns, avro_schema=avro_schema)
     os.makedirs(out_dir, exist_ok=True)
 
     def convert(batches):
@@ -955,6 +1034,18 @@ def convert_avro_to_parquet(spark, path, out_dir: str, columns=None,
                  _pa.array([batch.num_rows], _pa.int64())],
                 names=["source_file", "file", "n_rows"])
 
-    rows = (bin_df.select("path", "content")
-                  .mapInArrow(convert, manifest_schema).collect())
-    return [r.asDict() for r in rows]
+    if local is not None:
+        # binaryFile's path column: the Hadoop-qualified local path
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(["file:" + local], pa.string()),
+             pa.array([raw], pa.binary())], names=["path", "content"])
+        rows = [r for b in convert([batch]) for r in b.to_pylist()]
+    else:
+        from pyspark.sql import types as T
+        manifest_schema = T.StructType([
+            T.StructField("source_file", T.StringType()),
+            T.StructField("file", T.StringType()),
+            T.StructField("n_rows", T.LongType())])
+        rows = [r.asDict() for r in bin_df.select("path", "content")
+                .mapInArrow(convert, manifest_schema).collect()]
+    return ConvertedFiles(rows, _read_back_schema(out_schema))

@@ -143,7 +143,8 @@ class CdcPipeline:
                             store=client)
         # the auto backend keeps its bucketed table beside the
         # versioned dir — the backend guards refuse in-place switches
-        self.bucketed_dir = self.state_dir if state_backend == "bucketed"             else os.path.join(work_dir, "state_bucketed")
+        self.bucketed_dir = self.state_dir if state_backend == "bucketed" \
+            else os.path.join(work_dir, "state_bucketed")
         active = state_backend
         if state_backend == "auto":
             active = self.doc.get(

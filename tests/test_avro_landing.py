@@ -4,6 +4,7 @@ don't duplicate rows, and the CDC merge consumes the landing parquet
 with results identical to merging the Avro directly."""
 
 import os
+import re
 from decimal import Decimal
 
 import pytest
@@ -774,17 +775,19 @@ class _RegressingListClient:
     after the first call — the non-monotone lagging listing the client
     contract permits. Every other request passes through."""
 
-    def __init__(self, inner, log_prefix):
+    def __init__(self, inner, log_prefix, upto=0):
         self._inner = inner
         self._log_prefix = log_prefix
+        self._upto = upto
         self.log_lists = 0
 
     def list_keys(self, prefix, start_after=None):
         keys = self._inner.list_keys(prefix, start_after=start_after)
         if prefix == self._log_prefix:
             self.log_lists += 1
-            if self.log_lists >= 2:          # regress: only v0 visible
-                keys = [k for k in keys if k.endswith("/v0.json")]
+            if self.log_lists >= 2:  # regress: only v0..v{upto} visible
+                keys = [k for k in keys if int(re.search(
+                    r"/v(\d+)\.json$", k).group(1)) <= self._upto]
         return keys
 
     def __getattr__(self, name):
@@ -932,3 +935,247 @@ def test_version_listing_skips_landing_segments(spark, tmp_path):
     assert c.clog.read_committed()[0] == 1
     assert listed and all(re.search(r"/_landing_log/v\d+\.json$", k)
                           for k in listed)
+
+
+# -- one-file conversion in the driver --
+
+def test_one_file_convert_new_starts_no_spark_job(spark, tmp_path):
+    """A batch of one new file converts in the driver: no binaryFile
+    job, no schema peek, no parquet schema read. Two files still run
+    the distributed conversion, which the same probe counts."""
+    from test_streaming import _jobs_started
+    src = tmp_path / "avro"
+    src.mkdir()
+    c = AvroLandingConverter(spark, str(src), str(tmp_path / "landing"))
+    _write_avro(src, "k1_oracle-cdc-logminer_0.avro", _events(0, 10))
+    res, jobs = _jobs_started(spark, c.convert_new)
+    assert res["converted"] == 1
+    assert jobs == 0
+    _write_avro(src, "k1_oracle-cdc-logminer_1.avro", _events(10, 15))
+    _write_avro(src, "k1_oracle-cdc-logminer_2.avro", _events(15, 20))
+    res, jobs = _jobs_started(spark, c.convert_new)
+    assert res["converted"] == 2
+    assert jobs >= 1
+    assert c.read_landing().count() == 20
+
+
+def test_one_file_conversion_is_byte_identical_to_distributed(spark,
+                                                             tmp_path):
+    """The driver-side conversion of one file writes the parquet bytes
+    the mapInArrow path writes for it (table and schema metadata) and
+    returns the same manifest row, ``source_file`` being binaryFile's
+    ``file:`` path. A directory input takes the distributed path."""
+    import pyarrow.parquet as pq
+    src = tmp_path / "a dir"  # a space: the path is not URI-encoded
+    src.mkdir()
+    _write_avro(src, "k1_oracle-cdc-logminer_0.avro", _events(0, 40))
+    one = str(src / "k1_oracle-cdc-logminer_0.avro")
+    local = avro_ocf.convert_avro_to_parquet(spark, [one],
+                                             str(tmp_path / "local"))
+    dist = avro_ocf.convert_avro_to_parquet(spark, str(src),
+                                            str(tmp_path / "dist"))
+    assert local == dist
+    assert local[0]["source_file"] == "file:" + one
+    assert local[0]["n_rows"] == 40
+    name = local[0]["file"]
+    a, b = tmp_path / "local" / name, tmp_path / "dist" / name
+    ta, tb = pq.read_table(a), pq.read_table(b)
+    assert ta.equals(tb)
+    assert ta.schema.metadata == tb.schema.metadata
+    assert a.read_bytes() == b.read_bytes()
+    assert local.schema == dist.schema
+
+
+def test_one_file_rule_needs_a_local_default_fs(spark, tmp_path):
+    """Spark resolves a path without a scheme against ``fs.defaultFS``:
+    the driver converts it in place only when that is the local
+    filesystem, else the path goes to the binaryFile job."""
+    f = tmp_path / "k1_oracle-cdc-logminer_0.avro"
+    f.write_bytes(b"")
+    assert avro_ocf._one_local_file(spark, [str(f)]) == str(f)
+    assert avro_ocf._one_local_file(spark, str(tmp_path)) is None
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "hdfs://namenode:8020")
+    try:
+        assert avro_ocf._one_local_file(spark, [str(f)]) is None
+    finally:
+        if old is None:
+            conf.unset("fs.defaultFS")
+        else:
+            conf.set("fs.defaultFS", old)
+
+
+def _local_ts_envelope():
+    """ENVELOPE with a local-timestamp payload field (TimestampNTZ in
+    the decode plan)."""
+    fields = []
+    for f in ENVELOPE["fields"]:
+        if f["name"] == "payload":
+            f = {"name": "payload", "type": {
+                "type": "record", "name": "payload", "fields": [
+                    *f["type"]["fields"],
+                    {"name": "LOCAL_TS", "type": [
+                        "null", {"type": "long",
+                                 "logicalType": "local-timestamp-millis"}]},
+                ]}}
+        fields.append(f)
+    return {**ENVELOPE, "fields": fields}
+
+
+@pytest.mark.parametrize("fixture", ["plain", "columns", "drift",
+                                     "local_ts"])
+def test_fingerprint_from_decode_plan_matches_parquet_read(spark, tmp_path,
+                                                           fixture):
+    """Each batch's manifest fingerprint, taken from the decode plan,
+    equals the fingerprint of Spark's read of the written parquet, on
+    the one-file (driver) and two-file (distributed) paths."""
+    from test_avro_source import _event
+
+    from datastream_delta_plugins_spark.sources.avro_landing import \
+        _schema_fp
+    src = tmp_path / "avro"
+    src.mkdir()
+    kw = {"columns": ["EMPLOYEE_ID", "HIRE_DATE"]} \
+        if fixture == "columns" else {}
+    c = AvroLandingConverter(spark, str(src), str(tmp_path / "landing"),
+                             **kw)
+    schema = ENVELOPE
+    if fixture == "drift":
+        # the reader schema comes from each batch's first header, so a
+        # drifted batch lands with its own (wider) fingerprint
+        _write_avro(src, "k1_oracle-cdc-logminer_a.avro", _events(0, 5))
+        assert c.convert_new()["converted"] == 1
+        schema = {**ENVELOPE, "fields": [
+            f if f["name"] != "payload" else {
+                "name": "payload", "type": {
+                    "type": "record", "name": "payload", "fields": [
+                        *f["type"]["fields"],
+                        {"name": "NEW_COL", "type": ["null", "long"]}]}}
+            for f in ENVELOPE["fields"]]}
+    elif fixture == "local_ts":
+        schema = _local_ts_envelope()
+
+    def blob(name, lo, hi):
+        evs = [_event(f"u{i:05d}", CDC, "INSERT", i, f"emp{i}",
+                      Decimal("1.50"), i) for i in range(lo, hi)]
+        for e in evs:
+            if fixture == "drift":
+                e["payload"]["NEW_COL"] = e["payload"]["EMPLOYEE_ID"]
+            elif fixture == "local_ts":
+                e["payload"]["LOCAL_TS"] = 1_700_000_000_000 + lo
+        (src / name).write_bytes(avro_ocf.write_ocf(schema, evs))
+
+    blob("k1_oracle-cdc-logminer_b.avro", 10, 15)
+    assert c.convert_new()["converted"] == 1
+    blob("k1_oracle-cdc-logminer_c.avro", 15, 20)
+    blob("k1_oracle-cdc-logminer_d.avro", 20, 25)
+    assert c.convert_new()["converted"] == 2
+    committed = c._committed()
+    for d in committed["batch_dirs"]:
+        read = spark.read.parquet(os.path.join(c.data_dir, d)).schema
+        assert committed["schemas"][d] == _schema_fp(read), d
+    fps = set(committed["schemas"].values())
+    assert len(fps) == (2 if fixture == "drift" else 1)
+
+
+# -- compaction under a live converter --
+
+def test_compaction_rebases_over_a_racing_converter(spark, tmp_path,
+                                                    monkeypatch):
+    """A converter commits N times while a compaction writes: the
+    compaction still writes once and commits once, on top of the
+    converter's batches, and a vacuum() run meanwhile (with the log
+    past the compaction's stamp) leaves its in-flight dir alone."""
+    src = tmp_path / "avro"
+    src.mkdir()
+    landing = str(tmp_path / "landing")
+    ing, cmp, vac = (AvroLandingConverter(spark, str(src), landing)
+                     for _ in range(3))
+    for i in range(3):
+        _write_avro(src, f"k1_oracle-cdc-logminer_{i}.avro",
+                    _events(i * 5, i * 5 + 5))
+        ing.convert_new()
+    inputs = ing.committed_batch_dirs()
+    n_racing = 3
+    real_write, real_commit = cmp._write_attempt, cmp.clog.commit_at
+    writes, commits, vacuumed = [], [], []
+
+    def racing_write(ver, write):
+        writes.append(ver)
+        out = real_write(ver, write)
+        if len(writes) == 1:
+            for i in range(3, 3 + n_racing):
+                _write_avro(src, f"k1_oracle-cdc-logminer_{i}.avro",
+                            _events(i * 5, i * 5 + 5))
+                ing.convert_new()
+            vacuumed.extend(vac.vacuum())
+        return out
+
+    def counted_commit(v, payload):
+        out = real_commit(v, payload)
+        commits.append(payload["batch_dirs"])
+        return out
+    monkeypatch.setattr(cmp, "_write_attempt", racing_write)
+    monkeypatch.setattr(cmp.clog, "commit_at", counted_commit)
+    assert cmp.compact(min_batches=3) == {"compacted": 3}
+    assert len(writes) == 1 and len(commits) == 1
+
+    dirs = ing.committed_batch_dirs()
+    compacted = dirs[0]
+    assert compacted not in inputs and len(dirs) == 1 + n_racing
+    assert compacted not in vacuumed
+    assert not set(inputs) & set(dirs)
+    total = 5 * (3 + n_racing)
+    landed = ing.read_landing()
+    assert landed.count() == total
+    assert landed.select("uuid").distinct().count() == total
+    assert set(inputs) <= set(vac.vacuum())
+    assert ing.read_landing().count() == total
+
+
+def test_rebased_compaction_survives_a_stale_vacuum(spark, tmp_path,
+                                                   monkeypatch):
+    """A compaction rebased over converter commits lands past its
+    stamp. A vacuum whose log listing regresses to the version before
+    that commit sees the compacted dir unreferenced and stamped below
+    its CURRENT; the compaction's record (kept as long as the dir, its
+    inputs all live in that snapshot) must still spare it."""
+    from datastream_delta_plugins_spark.sources.avro_landing import \
+        LOG_SUBDIR
+    src = tmp_path / "avro"
+    src.mkdir()
+    landing = str(tmp_path / "landing")
+    inner = InMemoryObjectStore()
+    ing, cmp = (AvroLandingConverter(spark, str(src), landing, client=inner)
+                for _ in range(2))
+    for i in range(3):                      # commits v0, v1, v2
+        _write_avro(src, f"k1_oracle-cdc-logminer_{i}.avro",
+                    _events(i * 5, i * 5 + 5))
+        ing.convert_new()
+    inputs = ing.committed_batch_dirs()
+    real_write = cmp._write_attempt
+
+    def racing_write(ver, write):
+        out = real_write(ver, write)
+        for i in (3, 4):                    # converter commits v3, v4
+            _write_avro(src, f"k1_oracle-cdc-logminer_{i}.avro",
+                        _events(i * 5, i * 5 + 5))
+            ing.convert_new()
+        return out
+    monkeypatch.setattr(cmp, "_write_attempt", racing_write)
+    assert cmp.compact(min_batches=3) == {"compacted": 3}
+    assert inner.list_keys(landing + "/" + LOG_SUBDIR + "/v5.json")
+    compacted = ing.committed_batch_dirs()[0]
+    assert compacted.startswith("b3")       # stamped 3, committed at 5
+
+    # a fresh maintenance process: its first vacuum reads v5, its
+    # second a listing regressed to v4
+    maint = AvroLandingConverter(spark, str(src), landing,
+                                 client=_RegressingListClient(
+                                     inner, landing + "/" + LOG_SUBDIR
+                                     + "/v", upto=4))
+    assert [d for d in maint.vacuum() if d.startswith("b")] == inputs
+    assert compacted not in maint.vacuum()
+    assert os.path.isdir(os.path.join(ing.data_dir, compacted))
+    assert ing.read_landing().count() == 25

@@ -215,9 +215,10 @@ def test_q06_no_sort_merge_join(spark, sf_smoke):
 
 
 def test_direct_conversion_plan_is_scan_plus_map_only(spark, tmp_path):
-    """convert_avro_to_parquet must stay binaryFile scan -> MapInArrow:
-    no exchange (conversion parallelism = input splits) and no JVM
-    projection (rows never materialize engine-side)."""
+    """convert_avro_to_parquet's multi-file path must stay binaryFile
+    scan -> MapInArrow: no exchange (conversion parallelism = input
+    splits) and no JVM projection (rows never materialize engine-side).
+    A one-file input converts in the driver and has no plan."""
     from test_avro_source import ENVELOPE, _varied_event
 
     from datastream_delta_plugins_spark.sources import avro_ocf
